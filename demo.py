@@ -36,6 +36,7 @@ def main() -> int:
 
     from greenplum_cdc_spark.io import load_table
     from greenplum_cdc_spark.session import get_spark
+    from greenplum_cdc_spark.sources.maxwell import events_as_maxwell
     from greenplum_cdc_spark.streaming.pipeline import CDCPipeline
 
     spark = get_spark("cdc-demo", cpus=8)
@@ -43,24 +44,8 @@ def main() -> int:
     try:
         # -- 01: the Maxwell feed (app -> MySQL -> Maxwell's Daemon) --
         ev = load_table(spark, sf_dir, "events")
-        line = F.to_json(
-            F.struct(
-                F.lit("appdb").alias("database"),
-                F.lit("events").alias("table"),
-                F.when(F.col("event_type") == "error", F.lit("delete"))
-                .otherwise(F.lit("insert"))
-                .alias("type"),
-                F.expr("unix_micros(ts) div 1000").alias("ts"),
-                F.col("event_id").alias("xid"),
-                F.struct(
-                    F.col("user_id").alias("id"),
-                    F.col("value").alias("value"),
-                    F.col("event_type").alias("event_type"),
-                ).alias("data"),
-            )
-        )
         feed_dir = os.path.join(base, "feed")
-        ev.select(line.alias("line")).write.mode("overwrite").text(feed_dir)
+        events_as_maxwell(ev).write.mode("overwrite").text(feed_dir)
         n_events = ev.count()
         print(f"[01 maxwell] {n_events} envelopes produced")
 

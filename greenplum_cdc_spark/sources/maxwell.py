@@ -117,6 +117,31 @@ def events_as_cdc(events: DataFrame) -> DataFrame:
     )
 
 
+def events_as_maxwell(events: DataFrame) -> DataFrame:
+    """The ``events_as_cdc`` feed serialized as genuine Maxwell JSON
+    envelopes, one per row in a single ``line`` column — what Maxwell's
+    Daemon would publish for the table: ms-epoch ``ts``, event_id as
+    ``xid``, user_id as the row's ``id``."""
+    return events.select(
+        F.to_json(
+            F.struct(
+                F.lit("appdb").alias("database"),
+                F.lit("events").alias("table"),
+                F.when(F.col("event_type") == "error", F.lit("delete"))
+                .otherwise(F.lit("insert"))
+                .alias("type"),
+                F.expr("unix_micros(ts) div 1000").alias("ts"),
+                F.col("event_id").alias("xid"),
+                F.struct(
+                    F.col("user_id").alias("id"),
+                    F.col("value").alias("value"),
+                    F.col("event_type").alias("event_type"),
+                ).alias("data"),
+            )
+        ).alias("line")
+    )
+
+
 # SQL fragment duplicating events_as_cdc for DuckDB oracles.
 EVENTS_AS_CDC_SQL = """
 SELECT

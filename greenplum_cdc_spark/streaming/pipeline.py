@@ -5,7 +5,16 @@ cdc_periodic_load.sql; sleep 5; done` (README.md:85-92): poll the bus,
 append to the archive, apply to replicas, advance the watermark. Here
 that loop IS the engine: `readStream` (file source standing in for the
 RabbitMQ consumer — on a cluster this would be the Kafka source with
-identical downstream code) → `parse_maxwell` → `foreachBatch` merge.
+identical downstream code) → `foreachBatch(CDCPipeline.process_batch)`.
+
+Like the reference's single `process_events()` (cdc_plpgsql_functions
+.sql:103-241), `CDCPipeline.process_batch` is the ONE micro-batch body
+for every source and sink: parse → optional archive → typed feed →
+latest-wins merge against the current replica → commit → watermark.
+Subclasses declare only what differs — a wire format brings its parser,
+replay-order columns and typed projection (`Wal2JsonPipeline`,
+`DebeziumPipeline`); a sink brings its commit step (`FanoutCDCPipeline`,
+`HeterogeneousFanoutPipeline`).
 
 Replica storage uses versioned parquet directories with a `_LATEST`
 pointer — the same commit-pointer idea Delta/Iceberg use, minimal form:
@@ -17,10 +26,12 @@ pointer still names the old complete version).
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import load_table, shuffle_partitions
 from ..operators.cdc import (
     apply_incremental,
     normalize_pk_changes,
@@ -28,9 +39,12 @@ from ..operators.cdc import (
     watermark_state,
     write_archive,
 )
-from ..sources.maxwell import DML_OPS, parse_maxwell
+from ..sources.debezium import parse_debezium
+from ..sources.maxwell import DML_OPS, events_as_maxwell, parse_maxwell
+from ..sources.wal2json import parse_wal2json
 from ..phases import phase, reset
 from .scaffold import (
+    adopt_path,
     adopt_scratch,
     cached_feed,
     drain_memory,
@@ -226,7 +240,18 @@ class ReplicaStore:
 
 
 class CDCPipeline:
-    """File/Kafka-agnostic Maxwell stream → replica + archive + watermark."""
+    """File/Kafka-agnostic CDC stream → replica + archive + watermark.
+
+    The class attributes are what a subclass may redeclare: `_parse`
+    (raw ``line`` frame → typed CDC event frame), `order_cols` (the
+    replay total order) and `keep_tombstones` (retain deletes as
+    tombstone rows); `_typed_feed` and `_commit` are the per-source
+    projection and the per-sink commit step.
+    """
+
+    _parse = staticmethod(parse_maxwell)
+    order_cols: tuple[str, ...] = _ORDER_COLS
+    keep_tombstones = False
 
     def __init__(
         self,
@@ -239,9 +264,6 @@ class CDCPipeline:
         self.store = ReplicaStore(spark, replica_path)
         self.archive_path = archive_path
         self.key_cols = key_cols
-        # replay total order; source adapters with a different sequence
-        # vocabulary (e.g. wal2json's (ts, xid, change_idx)) override
-        self.order_cols: tuple[str, ...] = _ORDER_COLS
 
     def _typed_feed(self, parsed: DataFrame) -> DataFrame:
         """Project the generic Maxwell payload into the replica's shape.
@@ -265,19 +287,26 @@ class CDCPipeline:
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         """foreachBatch body — the cdc_periodic_load.sql micro-batch."""
-        parsed = parse_maxwell(batch)
+        parsed = self._parse(batch)
         if self.archive_path:
             write_archive(parsed.filter(F.col("op").isNotNull()), self.archive_path)
         feed = self._typed_feed(parsed)
         replica = self.store.read()
+        merge = dict(
+            key_cols=self.key_cols,
+            order_cols=self.order_cols,
+            keep_tombstones=self.keep_tombstones,
+        )
         if replica is None:
-            merged = snapshot_latest(feed, key_cols=self.key_cols, order_cols=self.order_cols)
+            merged = snapshot_latest(feed, **merge)
         else:
-            merged = apply_incremental(
-                replica, feed, key_cols=self.key_cols, order_cols=self.order_cols
-            )
-        self.store.commit(merged)
+            merged = apply_incremental(replica, feed, **merge)
+        self._commit(merged, feed)
         self._commit_watermark()
+
+    def _commit(self, merged: DataFrame, feed: DataFrame) -> None:
+        """Write the merged replica as the store's next version."""
+        self.store.commit(merged)
 
     def _commit_watermark(self) -> None:
         """Persist the `maxwell_ts` analog next to the replica after every
@@ -375,6 +404,37 @@ ORDER BY hour_start, event_type
 """
 
 
+def _drain_replicas(
+    spark: SparkSession, sf_dir: str, key: str, lines, make_pipe
+) -> list[DataFrame]:
+    """Shared lifecycle of the replica entries: write the entry's feed
+    once per process (``lines()`` → one text column, timed as the
+    entry's ``synth`` phase), drain it through ``make_pipe(base)`` in
+    one availableNow run, and return each store's final replica, read
+    through a fresh store over its adopted tree. The per-run scratch
+    (checkpoint, replica dirs) is removed either way."""
+    base = scratch_dir(f"{key}_")
+    try:
+        reset(key)
+
+        def _write(d: str) -> None:
+            with phase(key, "synth"):
+                lines().write.mode("overwrite").text(d)
+
+        in_dir = cached_feed((key, sf_dir), _write)
+        with shuffle_partitions(spark, 2):
+            pipe = make_pipe(base)
+            pipe.run_available(in_dir, os.path.join(base, "ckpt"))
+            stores = getattr(pipe, "stores", [pipe.store])
+            # adopt each finished replica tree (rename, no re-write)
+            return [
+                ReplicaStore(spark, adopt_path(st.path, f"{key}_out{i}_")).read()
+                for i, st in enumerate(stores)
+            ]
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def stream_cdc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10: the WHOLE reference loop end-to-end, as one checkable query.
 
@@ -387,62 +447,20 @@ def stream_cdc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle can state it directly — a full-pipeline (not just
     rows-only) correctness check.
     """
-    import shutil
-
-    from ..io import load_table
-
-    base = scratch_dir("cdc_e2e_")
-    ckpt = os.path.join(base, "ckpt")
-    replica_dir = os.path.join(base, "replica")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        line = F.to_json(
-            F.struct(
-                F.lit("appdb").alias("database"),
-                F.lit("events").alias("table"),
-                F.when(F.col("event_type") == "error", F.lit("delete"))
-                .otherwise(F.lit("insert"))
-                .alias("type"),
-                F.expr("unix_micros(ts) div 1000").alias("ts"),
-                F.col("event_id").alias("xid"),
-                F.struct(
-                    F.col("user_id").alias("id"),
-                    F.col("value").alias("value"),
-                    F.col("event_type").alias("event_type"),
-                ).alias("data"),
-            )
-        )
-        reset("stream_cdc_pipeline")
-
-        def _write(d: str) -> None:
-            with phase("stream_cdc_pipeline", "synth"):
-                ev.select(line.alias("line")).write.mode(
-                    "overwrite"
-                ).text(d)
-
-        in_dir = cached_feed(("stream_cdc_pipeline", sf_dir), _write)
-
-        from ..io import shuffle_partitions
-
-        with shuffle_partitions(spark, 2):
-            pipe = CDCPipeline(spark, replica_dir, key_cols=("pk",))
-            pipe.run_available(in_dir, ckpt)
-            # adopt the finished replica tree (rename, no re-write) and
-            # read it through a fresh store over the moved path
-            from .scaffold import adopt_path
-
-            replica = ReplicaStore(
-                spark, adopt_path(replica_dir, "cdc_e2e_out_")
-            ).read()
-            return replica.select(
-                "pk",
-                F.col("ts").alias("last_ts"),
-                F.col("seq").alias("last_seq"),
-                F.col("data")["value"].cast("double").alias("last_value"),
-                F.col("data")["event_type"].alias("last_event_type"),
-            ).orderBy("pk")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    [replica] = _drain_replicas(
+        spark,
+        sf_dir,
+        "stream_cdc_pipeline",
+        lambda: events_as_maxwell(load_table(spark, sf_dir, "events")),
+        lambda base: CDCPipeline(spark, os.path.join(base, "replica")),
+    )
+    return replica.select(
+        "pk",
+        F.col("ts").alias("last_ts"),
+        F.col("seq").alias("last_seq"),
+        F.col("data")["value"].cast("double").alias("last_value"),
+        F.col("data")["event_type"].alias("last_event_type"),
+    ).orderBy("pk")
 
 
 # Maxwell ms-epoch serialization truncates ts to milliseconds, and the
@@ -471,11 +489,15 @@ ORDER BY pk
 class FanoutCDCPipeline(CDCPipeline):
     """Reference TODO "add a second data target (fan-out)" (README.md:156).
 
-    The merged replica commits to N stores per micro-batch; each sink
-    keeps its own version pointer, so a slow/failed secondary never
-    corrupts the primary (its pointer still names its last complete
-    version, and the next batch re-converges it — merges are
-    deterministic latest-wins, so replay is idempotent).
+    The one micro-batch body merges against the primary (the first
+    path); only the commit step differs: the same merged frame is
+    committed to every store — secondaries are replicas of the replica,
+    not independent merges, so they stay bit-identical. Each sink keeps
+    its own version pointer, so a slow/failed secondary never corrupts
+    the primary (its pointer still names its last complete version, and
+    the next batch re-converges it — merges are deterministic
+    latest-wins, so replay is idempotent). The watermark is written
+    beside the primary.
     """
 
     def __init__(
@@ -486,24 +508,13 @@ class FanoutCDCPipeline(CDCPipeline):
         key_cols: tuple[str, ...] = ("pk",),
     ):
         super().__init__(spark, replica_paths[0], archive_path, key_cols)
-        self.stores = [ReplicaStore(spark, p) for p in replica_paths]
+        self.stores = [self.store] + [
+            ReplicaStore(spark, p) for p in replica_paths[1:]
+        ]
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        parsed = parse_maxwell(batch)
-        if self.archive_path:
-            write_archive(parsed.filter(F.col("op").isNotNull()), self.archive_path)
-        feed = self._typed_feed(parsed)
-        # compute the merge ONCE against the primary, then fan the same
-        # frame out — secondaries are replicas of the replica, not
-        # independent merges (keeps them bit-identical).
-        replica = self.store.read()
-        if replica is None:
-            merged = snapshot_latest(feed, key_cols=self.key_cols, order_cols=self.order_cols)
-        else:
-            merged = apply_incremental(
-                replica, feed, key_cols=self.key_cols, order_cols=self.order_cols
-            )
-        merged = merged.localCheckpoint(eager=True)  # compute once, write N times
+    def _commit(self, merged: DataFrame, feed: DataFrame) -> None:
+        if len(self.stores) > 1:
+            merged = merged.localCheckpoint(eager=True)  # compute once, write N times
         for store in self.stores:
             store.commit(merged)
 
@@ -522,67 +533,28 @@ def stream_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     `sink_id` and the oracle is the snapshot cross-joined with the sink
     ids — proving the sinks stayed bit-identical through the stream.
     """
-    import shutil
-
-    from ..io import load_table
-
-    base = scratch_dir("cdc_fanout_")
-    ckpt = os.path.join(base, "ckpt")
-    sink_dirs = [os.path.join(base, f"sink{i}") for i in range(_FANOUT_SINKS)]
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        line = F.to_json(
-            F.struct(
-                F.lit("appdb").alias("database"),
-                F.lit("events").alias("table"),
-                F.when(F.col("event_type") == "error", F.lit("delete"))
-                .otherwise(F.lit("insert"))
-                .alias("type"),
-                F.expr("unix_micros(ts) div 1000").alias("ts"),
-                F.col("event_id").alias("xid"),
-                F.struct(
-                    F.col("user_id").alias("id"),
-                    F.col("value").alias("value"),
-                    F.col("event_type").alias("event_type"),
-                ).alias("data"),
-            )
+    replicas = _drain_replicas(
+        spark,
+        sf_dir,
+        "stream_fanout",
+        lambda: events_as_maxwell(load_table(spark, sf_dir, "events")),
+        lambda base: FanoutCDCPipeline(
+            spark, [os.path.join(base, f"sink{i}") for i in range(_FANOUT_SINKS)]
+        ),
+    )
+    per_sink = [
+        replica.select(
+            F.lit(i).cast("int").alias("sink_id"),
+            "pk",
+            F.col("ts").alias("last_ts"),
+            F.col("data")["value"].cast("double").alias("last_value"),
         )
-        reset("stream_fanout")
-
-        def _write(d: str) -> None:
-            with phase("stream_fanout", "synth"):
-                ev.select(line.alias("line")).write.mode(
-                    "overwrite"
-                ).text(d)
-
-        in_dir = cached_feed(("stream_fanout", sf_dir), _write)
-
-        from ..io import shuffle_partitions
-
-        with shuffle_partitions(spark, 2):
-            pipe = FanoutCDCPipeline(spark, sink_dirs, key_cols=("pk",))
-            pipe.run_available(in_dir, ckpt)
-            from .scaffold import adopt_path
-
-            per_sink = []
-            for i, store in enumerate(pipe.stores):
-                replica = ReplicaStore(
-                    spark, adopt_path(store.path, f"cdc_fanout_out{i}_")
-                ).read()
-                per_sink.append(
-                    replica.select(
-                        F.lit(i).cast("int").alias("sink_id"),
-                        "pk",
-                        F.col("ts").alias("last_ts"),
-                        F.col("data")["value"].cast("double").alias("last_value"),
-                    )
-                )
-            out = per_sink[0]
-            for s in per_sink[1:]:
-                out = out.unionByName(s)
-            return out.orderBy("sink_id", "pk")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        for i, replica in enumerate(replicas)
+    ]
+    out = per_sink[0]
+    for s in per_sink[1:]:
+        out = out.unionByName(s)
+    return out.orderBy("sink_id", "pk")
 
 
 STREAM_FANOUT_SQL = f"""
@@ -754,9 +726,18 @@ class HeterogeneousFanoutPipeline(CDCPipeline):
     """One merge per micro-batch, TWO sink shapes: the versioned
     parquet replica (primary) and the ES-bulk JSON-lines feed — closing
     reference TODO #2's actual intent (a *different* downstream system,
-    not a second copy). The bulk delta is the batch-final change set
-    (latest-wins per key WITH tombstones), i.e. exactly the actions a
-    real indexer would POST for that batch."""
+    not a second copy). The commit step writes the replica, then the
+    bulk delta: the batch-final change set (latest-wins per key WITH
+    tombstones), i.e. exactly the actions a real indexer would POST for
+    that batch.
+
+    Tombstones are RETAINED in the replica too (A15 semantics):
+    micro-batches arrive in file order, not event order, so a dropped
+    delete would let a later-arriving-but-older insert resurrect the
+    key — the parquet-side mirror of the bulk feed's external
+    versioning."""
+
+    keep_tombstones = True
 
     def __init__(
         self,
@@ -768,29 +749,7 @@ class HeterogeneousFanoutPipeline(CDCPipeline):
         super().__init__(spark, replica_path, None, key_cols)
         self.bulk = BulkIndexStore(spark, bulk_path)
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        parsed = parse_maxwell(batch)
-        feed = self._typed_feed(parsed)
-        replica = self.store.read()
-        # tombstones are RETAINED (A15 semantics): micro-batches arrive
-        # in file order, not event order, so a dropped delete would let
-        # a later-arriving-but-older insert resurrect the key — the
-        # parquet-side mirror of the bulk feed's external versioning.
-        if replica is None:
-            merged = snapshot_latest(
-                feed,
-                key_cols=self.key_cols,
-                order_cols=self.order_cols,
-                keep_tombstones=True,
-            )
-        else:
-            merged = apply_incremental(
-                replica,
-                feed,
-                key_cols=self.key_cols,
-                order_cols=self.order_cols,
-                keep_tombstones=True,
-            )
+    def _commit(self, merged: DataFrame, feed: DataFrame) -> None:
         self.store.commit(merged)
         delta = snapshot_latest(
             feed,
@@ -805,7 +764,6 @@ class HeterogeneousFanoutPipeline(CDCPipeline):
             F.col("data")["value"].cast("double").alias("value"),
         )
         self.bulk.commit(delta)
-        self._commit_watermark()
 
 
 def stream_fanout_heterogeneous(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -822,35 +780,15 @@ def stream_fanout_heterogeneous(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the two sink kinds. Reference parity: README.md:156 (TODO
     "fan out to Elastic Search").
     """
-    import shutil
-
-    from ..io import load_table, shuffle_partitions
-
     base = scratch_dir("cdc_hetero_")
     ckpt = os.path.join(base, "ckpt")
     try:
         ev = load_table(spark, sf_dir, "events")
-        line = F.to_json(
-            F.struct(
-                F.lit("appdb").alias("database"),
-                F.lit("events").alias("table"),
-                F.when(F.col("event_type") == "error", F.lit("delete"))
-                .otherwise(F.lit("insert"))
-                .alias("type"),
-                F.expr("unix_micros(ts) div 1000").alias("ts"),
-                F.col("event_id").alias("xid"),
-                F.struct(
-                    F.col("user_id").alias("id"),
-                    F.col("value").alias("value"),
-                    F.col("event_type").alias("event_type"),
-                ).alias("data"),
-            )
-        )
         reset("stream_fanout_heterogeneous")
 
         def _write(d: str) -> None:
             with phase("stream_fanout_heterogeneous", "synth"):
-                ev.select(line.alias("line")).repartition(4).write.mode(
+                events_as_maxwell(ev).repartition(4).write.mode(
                     "overwrite"
                 ).text(d)
 
@@ -878,8 +816,6 @@ def stream_fanout_heterogeneous(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             q.awaitTermination()
             # live view: tombstones filtered at read time (A15 contract)
-            from .scaffold import adopt_path
-
             replica = (
                 ReplicaStore(
                     spark, adopt_path(pipe.store.path, "cdc_hetero_pq_")
@@ -1696,19 +1632,18 @@ ORDER BY event_type
 
 class Wal2JsonPipeline(CDCPipeline):
     """Reference TODO #1 closed at the STREAMING level: the ONLY thing
-    that changes for a Postgres wal2json deployment is the parser and
-    the sequence vocabulary — archive, latest-wins merge, versioned
-    replica store, and watermark commit are inherited untouched from
-    the Maxwell pipeline (the reuse the TODO asks for, now proven live
-    through foreachBatch rather than just in batch queries A38/A39).
+    that changes for a Postgres wal2json deployment is the parser, the
+    replay-order columns and the typed projection — archive, latest-wins
+    merge, versioned replica store, and watermark commit are the one
+    CDCPipeline body (the reuse the TODO asks for, proven live through
+    foreachBatch rather than just in batch queries A38/A39).
 
     Replay order is WAL order: (commit ts, xid, change_idx). pk comes
     from `data` for upserts and `oldkeys` for deletes.
     """
 
-    def __init__(self, spark: SparkSession, replica_path: str, **kw):
-        super().__init__(spark, replica_path, **kw)
-        self.order_cols = ("ts", "xid", "change_idx")
+    _parse = staticmethod(parse_wal2json)
+    order_cols = ("ts", "xid", "change_idx")
 
     def _typed_feed(self, parsed: DataFrame) -> DataFrame:
         return parsed.filter(F.col("op").isin(*DML_OPS)).select(
@@ -1722,27 +1657,6 @@ class Wal2JsonPipeline(CDCPipeline):
             "data",
         )
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from ..sources.wal2json import parse_wal2json
-
-        parsed = parse_wal2json(batch)
-        if self.archive_path:
-            write_archive(
-                parsed.filter(F.col("op").isNotNull()), self.archive_path
-            )
-        feed = self._typed_feed(parsed)
-        replica = self.store.read()
-        if replica is None:
-            merged = snapshot_latest(
-                feed, key_cols=self.key_cols, order_cols=self.order_cols
-            )
-        else:
-            merged = apply_incremental(
-                replica, feed, key_cols=self.key_cols, order_cols=self.order_cols
-            )
-        self.store.commit(merged)
-        self._commit_watermark()
-
 
 def stream_wal2json_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A41: the wal2json transaction feed streamed through the
@@ -1751,42 +1665,22 @@ def stream_wal2json_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     replica. The drained replica must equal the closed-form WAL-order
     snapshot the oracle states (the same truth as A39, now produced by
     the live streaming path instead of a batch plan)."""
-    import shutil
-
-    from ..io import shuffle_partitions
     from ..plans.cdc_queries import _wal2json_lines
 
-    base = scratch_dir("w2j_stream_")
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        reset("stream_wal2json_pipeline")
-
-        def _write(d: str) -> None:
-            with phase("stream_wal2json_pipeline", "synth"):
-                _wal2json_lines(spark, sf_dir).coalesce(2).write.mode(
-                    "overwrite"
-                ).text(d)
-
-        in_dir = cached_feed(("stream_wal2json_pipeline", sf_dir), _write)
-        with shuffle_partitions(spark, 2):
-            pipe = Wal2JsonPipeline(
-                spark, os.path.join(base, "replica"), key_cols=("pk",)
-            )
-            pipe.run_available(in_dir, ckpt)
-            from .scaffold import adopt_path
-
-            replica = ReplicaStore(
-                spark, adopt_path(pipe.store.path, "w2j_stream_out_")
-            ).read()
-            return replica.select(
-                "pk",
-                F.col("ts").alias("last_ts"),
-                F.col("xid").alias("last_xid"),
-                F.col("data")["value"].cast("double").alias("last_value"),
-                F.col("data")["event_type"].alias("last_event_type"),
-            ).orderBy("pk")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    [replica] = _drain_replicas(
+        spark,
+        sf_dir,
+        "stream_wal2json_pipeline",
+        lambda: _wal2json_lines(spark, sf_dir).coalesce(2),
+        lambda base: Wal2JsonPipeline(spark, os.path.join(base, "replica")),
+    )
+    return replica.select(
+        "pk",
+        F.col("ts").alias("last_ts"),
+        F.col("xid").alias("last_xid"),
+        F.col("data")["value"].cast("double").alias("last_value"),
+        F.col("data")["event_type"].alias("last_event_type"),
+    ).orderBy("pk")
 
 
 # --- A48 (round 6): streaming SCD2 maintenance --------------------------
@@ -2108,18 +2002,18 @@ ORDER BY pk, valid_from, version_seq
 class DebeziumPipeline(CDCPipeline):
     """The Debezium wire format at the STREAMING level — completing
     the format x mode matrix (Maxwell A2/stream, wal2json A38/A41,
-    Debezium A50/here): the ONLY thing that changes is the parser and
-    the replay-order vocabulary ((ts, lsn) — Debezium's commit clock
-    plus WAL position); archive, latest-wins merge, versioned replica
-    store, and watermark commit are inherited untouched.
+    Debezium A50/here): the ONLY things that change are the parser, the
+    replay-order vocabulary ((ts, lsn) — Debezium's commit clock plus
+    WAL position) and the typed projection; archive, latest-wins merge,
+    versioned replica store, and watermark commit are the one
+    CDCPipeline body.
 
     pk always rides `data` — parse_debezium routes the delete's
     `before` image into `data` (sources/debezium.py), so the merge
     sees the key without a coalesce."""
 
-    def __init__(self, spark: SparkSession, replica_path: str, **kw):
-        super().__init__(spark, replica_path, **kw)
-        self.order_cols = ("ts", "lsn")
+    _parse = staticmethod(parse_debezium)
+    order_cols = ("ts", "lsn")
 
     def _typed_feed(self, parsed: DataFrame) -> DataFrame:
         return parsed.filter(F.col("op").isin(*DML_OPS)).select(
@@ -2130,27 +2024,6 @@ class DebeziumPipeline(CDCPipeline):
             "data",
         )
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from ..sources.debezium import parse_debezium
-
-        parsed = parse_debezium(batch)
-        if self.archive_path:
-            write_archive(
-                parsed.filter(F.col("op").isNotNull()), self.archive_path
-            )
-        feed = self._typed_feed(parsed)
-        replica = self.store.read()
-        if replica is None:
-            merged = snapshot_latest(
-                feed, key_cols=self.key_cols, order_cols=self.order_cols
-            )
-        else:
-            merged = apply_incremental(
-                replica, feed, key_cols=self.key_cols, order_cols=self.order_cols
-            )
-        self.store.commit(merged)
-        self._commit_watermark()
-
 
 def stream_debezium_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A53 (round-8 addition): the Debezium envelope feed streamed
@@ -2158,39 +2031,19 @@ def stream_debezium_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse_debezium → foreachBatch latest-wins merge → versioned
     replica. The drained replica must equal A51's closed-form WAL-order
     snapshot (the same truth, produced by the live streaming path)."""
-    import shutil
-
-    from ..io import shuffle_partitions
     from ..plans.cdc_queries import _debezium_lines
 
-    base = scratch_dir("dbz_stream_")
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        reset("stream_debezium_pipeline")
-
-        def _write(d: str) -> None:
-            with phase("stream_debezium_pipeline", "synth"):
-                _debezium_lines(spark, sf_dir).coalesce(2).write.mode(
-                    "overwrite"
-                ).text(d)
-
-        in_dir = cached_feed(("stream_debezium_pipeline", sf_dir), _write)
-        with shuffle_partitions(spark, 2):
-            pipe = DebeziumPipeline(
-                spark, os.path.join(base, "replica"), key_cols=("pk",)
-            )
-            pipe.run_available(in_dir, ckpt)
-            from .scaffold import adopt_path
-
-            replica = ReplicaStore(
-                spark, adopt_path(pipe.store.path, "dbz_stream_out_")
-            ).read()
-            return replica.select(
-                "pk",
-                F.col("ts").alias("last_ts"),
-                F.col("lsn").alias("last_lsn"),
-                F.col("data")["value"].cast("double").alias("last_value"),
-                F.col("data")["event_type"].alias("last_event_type"),
-            ).orderBy("pk")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    [replica] = _drain_replicas(
+        spark,
+        sf_dir,
+        "stream_debezium_pipeline",
+        lambda: _debezium_lines(spark, sf_dir).coalesce(2),
+        lambda base: DebeziumPipeline(spark, os.path.join(base, "replica")),
+    )
+    return replica.select(
+        "pk",
+        F.col("ts").alias("last_ts"),
+        F.col("lsn").alias("last_lsn"),
+        F.col("data")["value"].cast("double").alias("last_value"),
+        F.col("data")["event_type"].alias("last_event_type"),
+    ).orderBy("pk")

@@ -32,8 +32,8 @@ def test_staleness_detector_fires():
     """The tolerant compare must stay RED on every class it still
     guards and GREEN only on the older-grade case it tolerates."""
     fresh = ci.render(
-        [("B1", "q1", "a.py:1", "oracle", "r9", "1"),
-         ("B2", "q2", "b.py:2", "rows-only", "never", "2")]
+        [("B1", "q1", "a.py:q1_fn", "oracle", "r9", "1"),
+         ("B2", "q2", "b.py:q2_fn", "rows-only", "never", "2")]
     )
     assert ci.staleness(fresh, fresh) == []
     older = fresh.replace("r9", "r3")
@@ -41,7 +41,9 @@ def test_staleness_detector_fires():
     never = fresh.replace("r9", "never")
     assert ci.staleness(never, fresh) == []
     assert ci.staleness(fresh, older)  # committed NEWER than fresh: red
-    assert ci.staleness(fresh.replace("a.py:1", "a.py:9"), fresh)
+    # def site pinned by file and qualname: a rename or a move is red
+    assert ci.staleness(fresh.replace("a.py:q1_fn", "a.py:q1_renamed"), fresh)
+    assert ci.staleness(fresh.replace("a.py:q1_fn", "c.py:q1_fn"), fresh)
     assert ci.staleness(fresh.replace("rows-only", "oracle"), fresh)
     assert ci.staleness(fresh.replace("\t2\n", "\t3\n"), fresh)
     assert ci.staleness(fresh.replace("q2", "q3"), fresh)

@@ -201,6 +201,97 @@ def test_fanout_pipeline_sinks_identical(spark, tmp_path):
     assert a == b
     assert [r["pk"] for r in a] == [0, 2]  # pk=1 deleted last
 
+    # the maxwell_ts analog is advanced beside the primary on every load
+    wm_path = tmp_path / "rep_a" / "_watermark"
+    assert wm_path.is_dir()
+    wm = spark.read.parquet(str(wm_path)).collect()
+    assert len(wm) == 1 and wm[0]["n_applied"] == len(a)
+
+
+# (pk, op, value) per poll; the event's position in the whole feed is
+# its replay order (ts and sequence both increase with it)
+_TWO_POLLS = [
+    [(1, "insert", 10), (2, "insert", 20), (1, "update", 11),
+     (3, "insert", 30), (2, "delete", 20), (5, "insert", 50)],
+    [(2, "insert", 21), (3, "update", 31), (1, "delete", 11),
+     (4, "insert", 40)],
+]
+
+
+def _maxwell_line(i, pk, op, value):
+    return {"database": "d", "table": "t", "type": op, "ts": 1700000000 + i,
+            "xid": i, "data": {"id": str(pk), "value": str(value)}}
+
+
+def _wal2json_line(i, pk, op, value):
+    change = {"kind": op, "schema": "public", "table": "t"}
+    if op == "delete":
+        change["oldkeys"] = {"keynames": ["user_id"], "keytypes": ["bigint"],
+                             "keyvalues": [pk]}
+    else:
+        change.update(columnnames=["user_id", "value"],
+                      columntypes=["bigint", "bigint"],
+                      columnvalues=[pk, value])
+    return {"xid": i, "timestamp": f"2023-11-14 22:13:{i:02d}",
+            "change": [change]}
+
+
+def _debezium_line(i, pk, op, value):
+    image = {"user_id": str(pk), "value": str(value)}
+    return {"before": image if op != "insert" else None,
+            "after": image if op != "delete" else None,
+            "source": {"ts_ms": 1700000000000 + 1000 * i, "db": "d",
+                       "table": "t", "lsn": i, "txId": i},
+            "op": {"insert": "c", "update": "u", "delete": "d"}[op],
+            "ts_ms": 1700000000000 + 1000 * i}
+
+
+@pytest.mark.parametrize(
+    "pipe_cls, encode",
+    [("CDCPipeline", _maxwell_line), ("Wal2JsonPipeline", _wal2json_line),
+     ("DebeziumPipeline", _debezium_line)],
+)
+def test_pipeline_incremental_polls_match_replay(spark, tmp_path, pipe_cls, encode):
+    """Two availableNow polls over one checkpoint: the second merges
+    into an existing replica (apply_incremental) — an update, deletes,
+    a key deleted in poll 1 and re-inserted in poll 2, and a key only
+    poll 1 wrote must leave exactly the latest-wins replay, with the
+    watermark persisted."""
+    import json
+
+    from greenplum_cdc_spark.streaming import pipeline as sp
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    rep = tmp_path / "rep"
+    pipe = getattr(sp, pipe_cls)(spark, str(rep))
+    replay: dict[int, int] = {}
+    i = 0
+    for n, poll in enumerate(_TWO_POLLS):
+        lines = []
+        for pk, op, value in poll:
+            i += 1
+            lines.append(json.dumps(encode(i, pk, op, value)))
+            if op == "delete":
+                replay.pop(pk, None)
+            else:
+                replay[pk] = value
+        (in_dir / f"poll{n}.json").write_text("\n".join(lines) + "\n")
+        pipe.run_available(str(in_dir), str(tmp_path / "ckpt"))
+        assert pipe.store.current_version() == n + 1  # one batch per poll
+
+        got = {
+            r["pk"]: int(r["value"])
+            for r in pipe.store.read()
+            .select("pk", F.col("data")["value"].alias("value"))
+            .collect()
+        }
+        assert got == replay
+
+        wm = spark.read.parquet(str(rep / "_watermark")).collect()
+        assert len(wm) == 1 and wm[0]["n_applied"] == len(replay)
+    assert replay == {2: 21, 3: 31, 4: 40, 5: 50}
+
 
 def test_pipeline_pk_change_and_watermark(spark, tmp_path):
     """A Maxwell update that changes the PK moves the row (old key

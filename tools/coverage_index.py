@@ -1,7 +1,7 @@
 """Generated coverage index (VERDICT r8 item 6).
 
 SURVEY.md §2 is 300+ hand-maintained rows with non-monotonic IDs;
-this script emits the mechanical `key → file:line → oracle kind →
+this script emits the mechanical `key → file:qualname → oracle kind →
 latest driver grade → gate position` table the driver and judge can
 diff instead of eyeballing the prose: one row per
 ``__spark_entry__.queries()`` entry, written to COVERAGE.tsv at the
@@ -12,7 +12,9 @@ Columns:
   survey_id   A/B/C id from SURVEY.md §2 (``-`` when the entry has no
               §2 row yet — the pytest fails on that too)
   key         queries() key
-  file:line   where the callable is defined (repo-relative)
+  file:qualname  where the callable is defined (repo-relative file
+              and qualified name — not the line, so an edit above a
+              def does not make the index stale)
   oracle      ``oracle`` when an oracle_sql() twin exists,
               ``rows-only`` otherwise
   grade       latest driver grade: ``rN`` from the newest
@@ -73,8 +75,7 @@ def latest_grades() -> dict[str, int]:
 def _def_site(fn) -> str:
     fn = inspect.unwrap(fn)
     src = inspect.getsourcefile(fn)
-    _, line = inspect.getsourcelines(fn)
-    return f"{os.path.relpath(src, REPO)}:{line}"
+    return f"{os.path.relpath(src, REPO)}:{fn.__qualname__}"
 
 
 def build_rows() -> list[tuple[str, ...]]:
@@ -99,7 +100,7 @@ def build_rows() -> list[tuple[str, ...]]:
 
 
 def render(rows: list[tuple[str, ...]]) -> str:
-    header = ("survey_id", "key", "file:line", "oracle", "grade", "gate_pos")
+    header = ("survey_id", "key", "file:qualname", "oracle", "grade", "gate_pos")
     return "\n".join("\t".join(r) for r in [header, *rows]) + "\n"
 
 
@@ -129,7 +130,7 @@ def staleness(committed: str, fresh: str) -> list[str]:
         problems.append(f"key set differs: {key}")
     for key in sorted(set(c_rows) & set(f_rows)):
         c, f = c_rows[key], f_rows[key]
-        for i, col in enumerate(("survey_id", "key", "file:line", "oracle")):
+        for i, col in enumerate(("survey_id", "key", "file:qualname", "oracle")):
             if c[i] != f[i]:
                 problems.append(f"{key}: {col} {c[i]!r} != {f[i]!r}")
         if c[5] != f[5]:
