@@ -20,23 +20,32 @@ Replica storage uses versioned parquet directories with a `_LATEST`
 pointer — the same commit-pointer idea Delta/Iceberg use, minimal form:
 a batch writes `v=<n+1>/` then flips the pointer, so readers never see a
 half-written replica and the pipeline survives a mid-write crash (the
-pointer still names the old complete version).
+pointer still names the old complete version). Each version directory
+is read with the Spark schema stored in its own part-file footer, so a
+read plans without a schema-inference job and time travel across DDL
+evolution sees each version's own columns. The watermark is observed on
+the merged frame while the commit writes it and persisted by a single
+pyarrow file replace, so the only Spark work a poll runs is the merge
+and its write — never a rescan of the version just written.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import StructType
 
 from ..io import load_table, shuffle_partitions
 from ..operators.cdc import (
     apply_incremental,
     normalize_pk_changes,
     snapshot_latest,
-    watermark_state,
     write_archive,
 )
 from ..sources.debezium import parse_debezium
@@ -54,6 +63,36 @@ from .scaffold import (
 
 # replay total order: PK-change deletes (subseq=0) precede their upsert
 _ORDER_COLS = ("ts", "seq", "subseq")
+
+# footer key under which Spark stores the row schema in every part file
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+class ReplicaSchemaMissing(RuntimeError):
+    """A replica directory has no part file whose footer carries the
+    Spark schema (it was not written by Spark)."""
+
+
+class WatermarkNotObserved(RuntimeError):
+    """The commit step finished without executing the observed merged
+    frame, so the batch's watermark was never measured."""
+
+
+def _footer_schema(dirs: list[str]) -> StructType:
+    """The Spark schema stored in the footer of the part file Spark's own
+    inference would open (the smallest path across `dirs`), read with
+    pyarrow: the schema `spark.read.parquet(*dirs)` infers, without the
+    Spark job that inference runs."""
+    parts = sorted(
+        os.path.join(d, f)
+        for d in dirs
+        for f in os.listdir(d)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    meta = (pq.read_metadata(parts[0]).metadata or {}) if parts else {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        raise ReplicaSchemaMissing(f"no Spark schema footer in {dirs}")
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
 
 
 class ReplicaStore:
@@ -75,7 +114,11 @@ class ReplicaStore:
       relocatable (adopt_path moves it wholesale).
 
     ``read()`` returns the logical table either way (base ∪ segments);
-    time travel sees exactly the segments linked at that version.
+    time travel sees exactly the segments linked at that version. Every
+    directory is read with the schema Spark stored in its own part-file
+    footer (`_footer_schema`), so building a read runs no Spark job and
+    a version keeps the columns it was written with; a directory whose
+    footer lacks that schema raises `ReplicaSchemaMissing`.
 
     Segment COMPACTION (round 8, VERDICT r7 "what's missing" item 2):
     append mode alone leaves one write-once segment per micro-batch, so
@@ -127,7 +170,7 @@ class ReplicaStore:
         p = os.path.join(self.path, f"v={v}")
         if v <= 0 or v > self.current_version() or not os.path.isdir(p):
             return None  # unknown or vacuumed version
-        return self.spark.read.parquet(p)
+        return self.spark.read.schema(_footer_schema([p])).parquet(p)
 
     def read(self, version: int | None = None) -> DataFrame | None:
         """Current replica, or time-travel to an earlier `version` —
@@ -144,9 +187,8 @@ class ReplicaStore:
         segs = self._manifest(v)
         if not segs:
             return base
-        seg_df = self.spark.read.parquet(
-            *[os.path.join(self.path, s) for s in segs]
-        )
+        paths = [os.path.join(self.path, s) for s in segs]
+        seg_df = self.spark.read.schema(_footer_schema(paths)).parquet(*paths)
         return base.unionByName(seg_df)
 
     def commit(self, df: DataFrame, append: DataFrame | None = None) -> int:
@@ -167,7 +209,11 @@ class ReplicaStore:
                 # fold inherited segments ∪ new rows into ONE segment,
                 # sized from the measured inherited bytes (B76 idiom)
                 paths = [os.path.join(self.path, s) for s in inherited]
-                folded = self.spark.read.parquet(*paths).unionByName(append)
+                folded = (
+                    self.spark.read.schema(_footer_schema(paths))
+                    .parquet(*paths)
+                    .unionByName(append)
+                )
                 n_bytes = sum(
                     os.path.getsize(os.path.join(root, fn))
                     for p in paths
@@ -301,21 +347,52 @@ class CDCPipeline:
             merged = snapshot_latest(feed, **merge)
         else:
             merged = apply_incremental(replica, feed, **merge)
+        observation = Observation()
+        merged = merged.observe(
+            observation,
+            F.unix_micros(F.max("ts")).alias("max_ts"),
+            F.count(F.lit(1)).alias("n"),
+        )
         self._commit(merged, feed)
-        self._commit_watermark()
+        self._commit_watermark(observation)
 
     def _commit(self, merged: DataFrame, feed: DataFrame) -> None:
         """Write the merged replica as the store's next version."""
         self.store.commit(merged)
 
-    def _commit_watermark(self) -> None:
+    def _commit_watermark(self, observation: Observation) -> None:
         """Persist the `maxwell_ts` analog next to the replica after every
-        batch (cdc_plpgsql_functions.sql:233-238 updates it per load)."""
-        replica = self.store.read()
-        if replica is not None:
-            watermark_state(replica).write.mode("overwrite").parquet(
-                os.path.join(self.store.path, "_watermark")
+        batch (cdc_plpgsql_functions.sql:233-238 updates it per load): the
+        committed version's max `ts` and row count — the values
+        `watermark_state` gives over it — as `observation` measured them
+        while `_commit` wrote the merged frame, so nothing is re-read.
+
+        Spark hands the metrics over on its listener bus after the write
+        returns; events the write already posted are drained instead of
+        waiting on the observation, which would block forever had
+        `_commit` never run the frame (`WatermarkNotObserved` then).
+        The one row is written with pyarrow to a hidden temporary file
+        and moved over ``_watermark/part-0.parquet`` by `os.replace`, so
+        a crash at any point leaves the previous watermark readable."""
+        jo = observation._jo
+        if not jo.future().isCompleted():
+            self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        if not jo.future().isCompleted() or jo.getRow().length() == 0:
+            raise WatermarkNotObserved(
+                f"{type(self).__name__}._commit did not write the merged frame"
             )
+        row = observation.get
+        table = pa.table({
+            "high_watermark_ts": pa.array(
+                [row["max_ts"]], pa.timestamp("us", tz="UTC")
+            ),
+            "n_applied": pa.array([row["n"]], pa.int64()),
+        })
+        wm_dir = os.path.join(self.store.path, "_watermark")
+        os.makedirs(wm_dir, exist_ok=True)
+        tmp = os.path.join(wm_dir, ".part-0.parquet.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(wm_dir, "part-0.parquet"))
 
     def run_available(self, input_path: str, checkpoint: str) -> None:
         """Drain everything currently in the source, then stop — the

@@ -517,3 +517,228 @@ def test_socket_transport_end_to_end(spark, tmp_path):
         r = by_xid[1000 + i]
         assert r["op"] == ("insert" if i % 2 == 0 else "delete")
         assert r["database_name"] == "appdb" and r["table_name"] == "events"
+
+
+# ---- replica reads plan without jobs; the watermark is observed ----
+
+
+def _next_job(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _assert_read_is_plan_only(spark, store, version=None):
+    """`store.read(version)` runs no Spark job and has the schema Spark's
+    inference gives over the same directories (nested nullability
+    included)."""
+    v = store.current_version() if version is None else version
+    j0 = _next_job(spark)
+    got = store.read(version)
+    assert _next_job(spark) == j0, "store.read() ran a Spark job"
+    want = spark.read.parquet(os.path.join(store.path, f"v={v}"))
+    segs = store._manifest(v)
+    if segs:
+        want = want.unionByName(
+            spark.read.parquet(*[os.path.join(store.path, s) for s in segs])
+        )
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    return got
+
+
+def _poll_feeds(encode, polls):
+    """JSON lines per poll; an event's position in the whole feed is its
+    replay order."""
+    import json
+
+    out, i = [], 0
+    for poll in polls:
+        lines = []
+        for pk, op, value in poll:
+            i += 1
+            lines.append(json.dumps(encode(i, pk, op, value)))
+        out.append(lines)
+    return out
+
+
+# the two polls of _TWO_POLLS, then one deleting every live key
+_THREE_POLLS = _TWO_POLLS + [
+    [(2, "delete", 21), (3, "delete", 31), (4, "delete", 40),
+     (5, "delete", 50)],
+]
+
+
+def _make_pipe(spark, tmp_path, pipe_cls):
+    from greenplum_cdc_spark.streaming import pipeline as sp
+
+    rep = str(tmp_path / "rep")
+    if pipe_cls == "FanoutCDCPipeline":
+        return sp.FanoutCDCPipeline(spark, [rep, str(tmp_path / "rep_b")])
+    if pipe_cls == "HeterogeneousFanoutPipeline":
+        return sp.HeterogeneousFanoutPipeline(spark, rep, str(tmp_path / "bulk"))
+    return getattr(sp, pipe_cls)(spark, rep)
+
+
+_PIPES = [
+    ("CDCPipeline", _maxwell_line),
+    ("Wal2JsonPipeline", _wal2json_line),
+    ("DebeziumPipeline", _debezium_line),
+    ("FanoutCDCPipeline", _maxwell_line),
+    ("HeterogeneousFanoutPipeline", _maxwell_line),
+]
+
+
+@pytest.mark.parametrize("pipe_cls, encode", _PIPES)
+def test_watermark_parity_and_plan_only_reads(spark, tmp_path, pipe_cls, encode):
+    """After every poll — including one that deletes every key — the
+    persisted `_watermark` is one parquet file whose row equals
+    `watermark_state` over the committed replica to the microsecond and
+    the row, with the schema a Spark-written watermark reads back with;
+    and reading each store runs no Spark job."""
+    from greenplum_cdc_spark.operators.cdc import watermark_state
+
+    pipe = _make_pipe(spark, tmp_path, pipe_cls)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    wm_dir = tmp_path / "rep" / "_watermark"
+
+    def micros(df):
+        return df.select(
+            F.unix_micros("high_watermark_ts").alias("ts_us"), "n_applied"
+        ).collect()
+
+    for n, lines in enumerate(_poll_feeds(encode, _THREE_POLLS)):
+        (in_dir / f"poll{n}.json").write_text("\n".join(lines) + "\n")
+        pipe.run_available(str(in_dir), str(tmp_path / "ckpt"))
+        assert [f for f in os.listdir(wm_dir) if f.endswith(".parquet")] == [
+            "part-0.parquet"
+        ]
+        for store in getattr(pipe, "stores", [pipe.store]):
+            assert store.current_version() == n + 1
+            _assert_read_is_plan_only(spark, store)
+        want = watermark_state(pipe.store.read())
+        spark_written = str(tmp_path / f"spark_wm{n}")
+        want.write.parquet(spark_written)
+        got = spark.read.parquet(str(wm_dir))
+        assert got.schema == spark.read.parquet(spark_written).schema
+        assert micros(got) == micros(want)
+    if not pipe.keep_tombstones:
+        assert micros(got) == [(None, 0)]  # the poll deleted every key
+
+
+def test_watermark_write_is_atomic(spark, tmp_path, monkeypatch):
+    """A crash inside poll 2's watermark write leaves poll 1's watermark
+    readable and `_watermark` holding exactly one parquet file."""
+    from pyspark.errors import StreamingQueryException
+
+    from greenplum_cdc_spark.streaming import pipeline as sp
+
+    pipe = sp.CDCPipeline(spark, str(tmp_path / "rep"))
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    wm_dir = tmp_path / "rep" / "_watermark"
+    feeds = _poll_feeds(_maxwell_line, _TWO_POLLS)
+    (in_dir / "poll0.json").write_text("\n".join(feeds[0]) + "\n")
+    pipe.run_available(str(in_dir), str(tmp_path / "ckpt"))
+    before = spark.read.parquet(str(wm_dir)).collect()
+    assert before[0]["n_applied"] == 3
+
+    def torn_write(table, where, **kw):
+        with open(where, "wb") as f:
+            f.write(b"PAR1 torn")  # a half-written file, then the crash
+        raise OSError("disk gone")
+
+    monkeypatch.setattr(sp.pq, "write_table", torn_write)
+    (in_dir / "poll1.json").write_text("\n".join(feeds[1]) + "\n")
+    with pytest.raises(StreamingQueryException, match="disk gone"):
+        pipe.run_available(str(in_dir), str(tmp_path / "ckpt"))
+    assert pipe.store.current_version() == 2  # the replica did commit
+    assert [f for f in os.listdir(wm_dir) if f.endswith(".parquet")] == [
+        "part-0.parquet"
+    ]
+    assert spark.read.parquet(str(wm_dir)).collect() == before
+
+
+def test_commit_that_skips_the_write_raises_not_hangs(spark, tmp_path):
+    """A `_commit` that never executes the observed merged frame makes
+    `_commit_watermark` raise `WatermarkNotObserved` at once instead of
+    waiting on an observation that can never complete."""
+    import time
+
+    from greenplum_cdc_spark.streaming import pipeline as sp
+
+    class SkipsWrite(sp.CDCPipeline):
+        def _commit(self, merged, feed):
+            pass
+
+    pipe = SkipsWrite(spark, str(tmp_path / "rep"))
+    batch = spark.createDataFrame(
+        [(ln,) for ln in _poll_feeds(_maxwell_line, _TWO_POLLS)[0]], "line string"
+    )
+    t0 = time.monotonic()
+    with pytest.raises(sp.WatermarkNotObserved):
+        pipe.process_batch(batch, 0)
+    assert time.monotonic() - t0 < 60
+    assert not (tmp_path / "rep" / "_watermark").exists()
+
+
+def test_append_store_reads_across_compaction_fold(spark, tmp_path):
+    """Append mode across a `compact_after` fold: every version's read
+    (base ∪ linked segments) plans without a job and keeps the inferred
+    schema, before and after the fold and after vacuum."""
+    K = 3
+    store = ReplicaStore(spark, str(tmp_path / "rep"), compact_after=K)
+    for i in range(2 * K):
+        store.commit(
+            spark.createDataFrame([(1000 + i,)], "x int"),
+            append=spark.createDataFrame([(2000 + i,)], "x int"),
+        )
+    assert any(
+        d.startswith("c") for d in os.listdir(os.path.join(store.path, "seg"))
+    )
+    for v in range(1, 2 * K + 1):
+        got = _assert_read_is_plan_only(spark, store, v)
+        assert got.count() == 1 + v
+    store.vacuum(keep_last=2)
+    assert store.read(version=1) is None
+    for v in (2 * K - 1, 2 * K):
+        _assert_read_is_plan_only(spark, store, v)
+
+
+def test_time_travel_reads_each_version_with_its_own_schema(spark, tmp_path):
+    """DDL evolution: v2 adds a column; reading v1 keeps v1's columns
+    and nested nullability, v2 has the new column, neither runs a job."""
+    nested = "pk bigint not null, s struct<a: int not null, b: string>"
+    store = ReplicaStore(spark, str(tmp_path / "rep"))
+    store.commit(spark.createDataFrame([(1, (1, "x"))], nested))
+    store.commit(
+        spark.createDataFrame(
+            [(1, (1, "x"), [2.0]), (2, (2, None), None)],
+            nested + ", added array<double>",
+        )
+    )
+    v1 = _assert_read_is_plan_only(spark, store, 1)
+    v2 = _assert_read_is_plan_only(spark, store, 2)
+    assert v1.columns == ["pk", "s"]
+    assert v2.columns == ["pk", "s", "added"]
+    store.commit(store.read(version=1))  # restore = commit an old version
+    store.vacuum(keep_last=1)
+    assert _assert_read_is_plan_only(spark, store).columns == ["pk", "s"]
+
+
+def test_version_without_spark_footer_raises(spark, tmp_path):
+    """A version directory not written by Spark has no schema footer to
+    plan from: the read raises `ReplicaSchemaMissing`."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from greenplum_cdc_spark.streaming.pipeline import ReplicaSchemaMissing
+
+    store = ReplicaStore(spark, str(tmp_path / "rep"))
+    os.makedirs(os.path.join(store.path, "v=1"))
+    pq.write_table(
+        pa.table({"pk": [1]}), os.path.join(store.path, "v=1", "part-0.parquet")
+    )
+    with open(os.path.join(store.path, "_LATEST"), "w") as f:
+        f.write("1")
+    with pytest.raises(ReplicaSchemaMissing):
+        store.read()
