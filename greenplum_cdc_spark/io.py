@@ -1,15 +1,29 @@
 """Table loading for the driver-generated parquet test data.
 
 At cluster scale these reads hit object storage with the same API; the
-load path is a plain ``spark.read.parquet`` so predicate pushdown,
-column pruning and partition pruning all apply untouched.
+load path is a plain ``spark.read.schema(...).parquet`` so predicate
+pushdown, column pruning and partition pruning all apply untouched.
+
+Planning a read runs no Spark job. `load_table` takes each table's
+schema from Spark's own inference once per file identity (the one memo
+layer, `memo.py`) and hands it to the reader, so only the first load of
+a file, or of a rewritten one, pays the inference job — the way a
+warehouse plans from its catalog rather than from its data files.
+Frames this package writes and reads back (`materialize`, replica
+versions) take the schema Spark stored in their own part-file footers
+(`_footer_schema`).
 """
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from . import memo
 
 TABLES = (
     "region",
@@ -31,7 +45,54 @@ def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", default)
 
 
+# footer key under which Spark stores the row schema in every part file
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+class ReplicaSchemaMissing(RuntimeError):
+    """A directory has no part file whose footer carries the Spark
+    schema (it was not written by Spark)."""
+
+
+def _footer_schema(dirs: list[str]) -> StructType:
+    """The Spark schema stored in the footer of the part file Spark's own
+    inference would open (the smallest path across `dirs`), read with
+    pyarrow: the schema `spark.read.parquet(*dirs)` infers, without the
+    Spark job that inference runs."""
+    parts = sorted(
+        os.path.join(d, f)
+        for d in dirs
+        for f in os.listdir(d)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    meta = (pq.read_metadata(parts[0]).metadata or {}) if parts else {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        raise ReplicaSchemaMissing(f"no Spark schema footer in {dirs}")
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+
+
+# Session confs that change what parquet schema inference returns; a
+# schema memoized under one setting is never handed to a read under
+# another.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """`<sf_dir>/<name>.parquet` as a lazy frame, with every timestamp
+    column as TIMESTAMP (LTZ) at microsecond precision.
+
+    The schema is Spark's own inference (`spark.read.parquet(path)
+    .schema`), run once per file identity and session inference confs
+    and memoized (`memo.get_or_build("parquet_schema", ...)`); the read
+    itself passes that schema, so every later load of an unchanged file
+    plans without a Spark job, and a file rewritten in place is
+    inferred again."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     # The driver may hand us a vanilla session; without this, parquet
@@ -43,8 +104,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # and every time function (unix_micros, window, watermark) expects
     # the LTZ type.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    for field in df.schema.fields:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = memo.get_or_build(
+        "parquet_schema",
+        [path],
+        lambda: spark.read.parquet(path).schema,
+        extra=tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS),
+    )
+    df = spark.read.schema(schema).parquet(path)
+    for field in schema.fields:
         simple = field.dataType.simpleString()
         # events.ts as TIMESTAMP(NANOS): with nanosAsLong it reads as
         # bigint nanos. Truncate (integer div — ns epochs exceed 2^53,
@@ -123,6 +191,8 @@ def materialize(df: DataFrame, prefix: str = "gate_") -> DataFrame:
     works but is driver-bound at scale; instead the result is spilled to
     a KEPT temp parquet (deleted at process exit, not at return) and
     read back lazily — executors stream it, the driver never holds rows.
+    The read back takes the schema the write stored in its own footer,
+    so it runs no inference job.
     """
     import atexit
     import shutil
@@ -131,7 +201,7 @@ def materialize(df: DataFrame, prefix: str = "gate_") -> DataFrame:
     out = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, out, ignore_errors=True)
     df.write.mode("overwrite").parquet(out)
-    return df.sparkSession.read.parquet(out)
+    return df.sparkSession.read.schema(_footer_schema([out])).parquet(out)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

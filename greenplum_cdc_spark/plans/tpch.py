@@ -18,9 +18,12 @@ Scale notes (SURVEY.md §6):
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from .. import memo
 from ..io import load_table
 
 # Exact-money / rate types. Widths are deliberately small so that the
@@ -1294,7 +1297,48 @@ ORDER BY g_status, g_priority,
 _BUCKETS = 8
 
 
-_BUCKETED_FOR: str | None = None
+def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """lineitem and orders stored `bucketBy(8, key)` as catalog tables
+    of this session, written once per session and input file identity:
+    the layout's whole value proposition is write-once/join-many, so
+    repeat passes pay only the join. The tables live in the session's
+    catalog, so the memo key carries the session too; each sf_dir gets
+    its own table names, so alternating inputs never read each other's
+    layout."""
+    import atexit
+    import shutil
+    import tempfile
+    import zlib
+
+    db = "bucketdemo"
+    lineitem = os.path.join(sf_dir, "lineitem.parquet")
+    orders = os.path.join(sf_dir, "orders.parquet")
+    tag = zlib.crc32(os.path.realpath(sf_dir).encode())
+    names = (f"{db}.lineitem_b_{tag:08x}", f"{db}.orders_b_{tag:08x}")
+
+    def build() -> tuple[str, str]:
+        if not spark.catalog.databaseExists(db):
+            loc = tempfile.mkdtemp(prefix="bucket_db_")
+            atexit.register(shutil.rmtree, loc, ignore_errors=True)
+            spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_extendedprice", "l_discount"
+        )
+        od = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderpriority"
+        )
+        for frame, key, table in ((li, "l_orderkey", names[0]), (od, "o_orderkey", names[1])):
+            (
+                frame.write.mode("overwrite")
+                .format("parquet")
+                .bucketBy(_BUCKETS, key)
+                .sortBy(key)
+                .saveAsTable(table)
+            )
+        return names
+
+    lb, ob = memo.get_or_build("bucketed_tables", [lineitem, orders], build, session=spark)
+    return spark.table(lb), spark.table(ob)
 
 
 def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1305,51 +1349,19 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes bucket-local: each task reads matching bucket files from
     both sides and sort-merge-joins them with NO Exchange. This
     operator materializes that layout for real — both sides written
-    `bucketBy(8, key)` sorted within buckets — runs the join, and the
-    pytest asserts the executed plan contains zero Exchange operators
-    before the join. The write cost amortizes across every subsequent
-    co-keyed join/aggregate, which is why warehouses bucket their
-    biggest facts (Greenplum's DISTRIBUTED BY (o_orderkey) is exactly
-    this layout, maxwell_gpdb.sql's analog on its replica tables).
+    `bucketBy(8, key)` sorted within buckets (`_bucketed_tables`) — runs
+    the join, and the pytest asserts the executed plan contains zero
+    Exchange operators before the join. The write cost amortizes across
+    every subsequent co-keyed join/aggregate, which is why warehouses
+    bucket their biggest facts (Greenplum's DISTRIBUTED BY (o_orderkey)
+    is exactly this layout, maxwell_gpdb.sql's analog on its replica
+    tables).
 
     The oracle states the plain join — layout must never change results.
     """
-    import tempfile
+    from ..io import materialize
 
-    from ..io import load_table, materialize
-
-    db = "bucketdemo"
-    if not spark.catalog.databaseExists(db):
-        loc = tempfile.mkdtemp(prefix="bucket_db_")
-        spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
-    # the layout's whole value proposition is write-once/join-many —
-    # amortize for real: rebuild only when this session hasn't bucketed
-    # THIS sf_dir yet (repeat bench passes then pay only the join)
-    global _BUCKETED_FOR
-    if _BUCKETED_FOR != sf_dir:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_extendedprice", "l_discount"
-        )
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderpriority"
-        )
-        (
-            li.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(_BUCKETS, "l_orderkey")
-            .sortBy("l_orderkey")
-            .saveAsTable(f"{db}.lineitem_b")
-        )
-        (
-            orders.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(_BUCKETS, "o_orderkey")
-            .sortBy("o_orderkey")
-            .saveAsTable(f"{db}.orders_b")
-        )
-        _BUCKETED_FOR = sf_dir
-    lb = spark.table(f"{db}.lineitem_b")
-    ob = spark.table(f"{db}.orders_b")
+    lb, ob = _bucketed_tables(spark, sf_dir)
     out = (
         ob.hint("merge")
         .join(lb.hint("merge"), F.col("o_orderkey") == F.col("l_orderkey"))
@@ -1381,10 +1393,7 @@ ORDER BY o_orderpriority
 def bucketed_join_plan(spark: SparkSession, sf_dir: str) -> str:
     """Executed-plan text of the bucket-local join itself (pre-agg), for
     the no-Exchange plan assertion in tests."""
-    db = "bucketdemo"
-    bucketed_colocated_join(spark, sf_dir)  # ensure tables exist
-    lb = spark.table(f"{db}.lineitem_b")
-    ob = spark.table(f"{db}.orders_b")
+    lb, ob = _bucketed_tables(spark, sf_dir)
     j = ob.hint("merge").join(lb.hint("merge"), F.col("o_orderkey") == F.col("l_orderkey"))
     return j._jdf.queryExecution().executedPlan().toString()
 

@@ -31,7 +31,6 @@ and its write — never a rescan of the version just written.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -39,9 +38,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql.types import StructType
 
-from ..io import load_table, shuffle_partitions
+from ..io import _footer_schema, load_table, shuffle_partitions
 from ..operators.cdc import (
     apply_incremental,
     normalize_pk_changes,
@@ -64,35 +62,10 @@ from .scaffold import (
 # replay total order: PK-change deletes (subseq=0) precede their upsert
 _ORDER_COLS = ("ts", "seq", "subseq")
 
-# footer key under which Spark stores the row schema in every part file
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-class ReplicaSchemaMissing(RuntimeError):
-    """A replica directory has no part file whose footer carries the
-    Spark schema (it was not written by Spark)."""
-
 
 class WatermarkNotObserved(RuntimeError):
     """The commit step finished without executing the observed merged
     frame, so the batch's watermark was never measured."""
-
-
-def _footer_schema(dirs: list[str]) -> StructType:
-    """The Spark schema stored in the footer of the part file Spark's own
-    inference would open (the smallest path across `dirs`), read with
-    pyarrow: the schema `spark.read.parquet(*dirs)` infers, without the
-    Spark job that inference runs."""
-    parts = sorted(
-        os.path.join(d, f)
-        for d in dirs
-        for f in os.listdir(d)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    )
-    meta = (pq.read_metadata(parts[0]).metadata or {}) if parts else {}
-    if _SPARK_SCHEMA_KEY not in meta:
-        raise ReplicaSchemaMissing(f"no Spark schema footer in {dirs}")
-    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
 
 
 class ReplicaStore:

@@ -731,7 +731,7 @@ def test_version_without_spark_footer_raises(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from greenplum_cdc_spark.streaming.pipeline import ReplicaSchemaMissing
+    from greenplum_cdc_spark.io import ReplicaSchemaMissing
 
     store = ReplicaStore(spark, str(tmp_path / "rep"))
     os.makedirs(os.path.join(store.path, "v=1"))

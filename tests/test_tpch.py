@@ -112,3 +112,63 @@ def test_q2_one_row_per_part(spark, sf_dir):
     rows = tpch.q2_min_cost_supplier(spark, sf_dir).collect()
     parts = [r["p_partkey"] for r in rows]
     assert len(parts) == len(set(parts))
+
+
+_RESTART_DRIVER = """
+import sys
+sys.path.insert(0, {repo!r})
+from greenplum_cdc_spark.plans.tpch import bucketed_colocated_join
+from greenplum_cdc_spark.session import get_spark
+
+runs = []
+for _ in range(2):
+    spark = get_spark("bucketed-restart", cpus=2)
+    try:
+        runs.append(sorted(tuple(r) for r in bucketed_colocated_join(spark, {sf!r}).collect()))
+    finally:
+        spark.stop()
+print("RUNS", len(runs[0]), len(runs[1]), runs[0] == runs[1])
+"""
+
+
+def test_bucketed_join_survives_session_restart(tmp_path, sf_dir):
+    """The bucketed tables live in a session's catalog: a new session in
+    the same process must rebuild them, not trust a process-wide flag.
+    Runs in a subprocess so the suite's shared session is never stopped."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_LOCAL_DIRS=str(tmp_path / "spark-local"))
+    out = subprocess.run(
+        [sys.executable, "-c", _RESTART_DRIVER.format(repo=repo, sf=sf_dir)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert any(
+        ln.startswith("RUNS ") and ln.split()[1] != "0" and ln.split()[3] == "True"
+        for ln in out.stdout.splitlines()
+    ), out.stdout
+
+
+def test_bucketed_join_follows_its_input_dir(spark, sf_dir, tmp_path):
+    """Alternating sf_dirs in one session: each input set keeps its own
+    bucketed tables, so going back to the first dir never reads the
+    second one's layout."""
+    import shutil
+
+    small, other = sf_dir, tmp_path / "sf"
+    other.mkdir()
+    li = load_table(spark, small, "lineitem").limit(50)
+    li.write.parquet(str(other / "lineitem.parquet"))
+    shutil.copy(f"{small}/orders.parquet", other / "orders.parquet")
+    first = sorted(tuple(r) for r in tpch.bucketed_colocated_join(spark, small).collect())
+    second = sorted(tuple(r) for r in tpch.bucketed_colocated_join(spark, str(other)).collect())
+    again = sorted(tuple(r) for r in tpch.bucketed_colocated_join(spark, small).collect())
+    assert sum(r[1] for r in second) == 50
+    assert first == again != second

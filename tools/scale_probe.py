@@ -476,8 +476,10 @@ def _sketches():
 def reset_caches(spark) -> None:
     """Drop every library-level memo a previous run may have left:
     _swap_persist slots (cached index relations), the IVF/PQ quantizer
-    training memo, and Spark's own cache registry. Scratch FEEDS on
-    disk are kept — they are inputs, not computed state."""
+    training memo, the one memo layer (`memo.py`: inferred table
+    schemas, bucketed tables), and Spark's own cache registry. Scratch
+    FEEDS on disk are kept — they are inputs, not computed state."""
+    from greenplum_cdc_spark import memo
     from greenplum_cdc_spark.operators import dedup, similarity
 
     for df in list(dedup._PERSIST_CACHE.values()):
@@ -487,6 +489,7 @@ def reset_caches(spark) -> None:
             pass
     dedup._PERSIST_CACHE.clear()
     similarity._IVF_TRAIN_CACHE.clear()
+    memo.clear()
     spark.catalog.clearCache()
 
 
