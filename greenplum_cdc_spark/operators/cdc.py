@@ -25,8 +25,16 @@ def snapshot_latest(
     op_col: str = "op",
     delete_op: str = "delete",
     keep_tombstones: bool = False,
+    partitions: int | None = None,
 ) -> DataFrame:
     """Batch snapshot reconstruction: latest-wins per key, deletes drop.
+
+    One shuffle on the key. With ``partitions`` the events are
+    hash-repartitioned on ``key_cols`` into exactly that many partitions
+    before the window, which reuses that exchange, so AQE cannot
+    coalesce the merge into fewer tasks: each output partition holds a
+    disjoint key set in ascending key order (the window's sort). Without
+    it AQE sizes the shuffle.
 
     Equivalent to replaying cdc_plpgsql_functions.sql:122-232 from an
     empty replica: only each key's final event decides its presence and
@@ -38,6 +46,8 @@ def snapshot_latest(
     cannot resurrect the key — see `apply_incremental` for when that
     matters. Filter ``op != delete`` at read time for the live view.
     """
+    if partitions is not None:
+        cdc = cdc.repartition(partitions, *key_cols)
     w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in order_cols])
     out = cdc.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
     if not keep_tombstones:
@@ -55,6 +65,7 @@ def apply_incremental(
     keep_tombstones: bool = False,
     watermark: DataFrame | None = None,
     enforce_watermark: bool = False,
+    partitions: int | None = None,
 ) -> DataFrame:
     """Merge a CDC micro-batch into an existing replica (foreachBatch body).
 
@@ -85,7 +96,9 @@ def apply_incremental(
     `snapshot_latest`) retains winning deletes in the replica so late
     pre-delete events lose the window to the tombstone — same
     invariant, retained delete rows instead of a watermark table.
-    One shuffle on the key either way, same as snapshot_latest.
+    One shuffle on the key either way, same as snapshot_latest; with
+    ``partitions`` it has exactly that many partitions (see
+    `snapshot_latest`).
     """
     if enforce_watermark or watermark is not None:
         if watermark is None:
@@ -108,7 +121,7 @@ def apply_incremental(
     base = base.select(*[F.col(c) if c in base.columns else F.lit(None).alias(c) for c in cols])
     return snapshot_latest(
         base.unionByName(batch), key_cols, order_cols, op_col, delete_op,
-        keep_tombstones=keep_tombstones,
+        keep_tombstones=keep_tombstones, partitions=partitions,
     )
 
 

@@ -71,6 +71,19 @@ class WatermarkNotObserved(RuntimeError):
 class ReplicaStore:
     """Versioned parquet replica with an atomic `_LATEST` pointer.
 
+    A version is the Greenplum ``DISTRIBUTED BY (key)`` analog: its rows
+    are hash-distributed on the key over `next_partitions()` files,
+    each holding a disjoint key set in ascending key order, so a merge
+    rewrites the replica on every task slot at once instead of in one
+    task. The layout rule sizes each version from the parquet bytes of
+    the one it replaces: ``max(ceil(B / 128 MB), min(defaultParallelism,
+    ceil(B / 128 KB)))`` files — one file per 128 MB for large replicas
+    (the B76 idiom), at least one per task slot above 128 KB, and one
+    file for tiny replicas, where a second file costs more than it
+    saves. Every file is written without dictionary pages: CDC row
+    images are high-cardinality, so dictionaries cost encode CPU and
+    make the files larger.
+
     Two commit modes (round 7, VERDICT r6 "what's missing" item 2):
 
     - ``commit(df)`` — full snapshot: version N is exactly `df`. The
@@ -98,9 +111,9 @@ class ReplicaStore:
     after 10^4 batches a read opens 10^4 parquet dirs. When a commit
     would inherit ``compact_after`` or more segments, it instead folds
     them ∪ the new rows into ONE new write-once segment (sized from the
-    MEASURED inherited bytes, the B76 idiom — ceil(bytes/128MB) files)
-    and links only that. Prior versions' manifests still name the
-    original segments, so time travel stays exact; vacuum GCs the
+    MEASURED inherited bytes by the same layout rule) and links only
+    that. Prior versions' manifests still name the original segments,
+    so time travel stays exact; vacuum GCs the
     originals once no retained version links them. Manifest length is
     thus bounded by ``compact_after`` forever; write amplification is
     the standard tiered trade (each row is rewritten once per
@@ -108,7 +121,8 @@ class ReplicaStore:
     amortized per batch, against O(history) opens per read without it).
     """
 
-    _COMPACT_TARGET_BYTES = 128 << 20  # one healthy parquet file per 128MB
+    _FILE_MAX_BYTES = 128 << 20  # one healthy parquet file per 128MB
+    _FILE_MIN_BYTES = 128 << 10  # below this a second file does not pay
 
     def __init__(
         self, spark: SparkSession, path: str, compact_after: int = 8
@@ -164,6 +178,42 @@ class ReplicaStore:
         seg_df = self.spark.read.schema(_footer_schema(paths)).parquet(*paths)
         return base.unionByName(seg_df)
 
+    def _bytes(self, rels: list[str]) -> int:
+        """Parquet bytes under the store-relative directories `rels`."""
+        return sum(
+            os.path.getsize(os.path.join(root, fn))
+            for rel in rels
+            for root, _dirs, files in os.walk(os.path.join(self.path, rel))
+            for fn in files
+            if fn.endswith(".parquet")
+        )
+
+    def _files_for(self, n_bytes: int) -> int:
+        """The layout rule: how many files `n_bytes` of parquet become."""
+        slots = self.spark.sparkContext.defaultParallelism
+        return max(
+            1,
+            -(-n_bytes // self._FILE_MAX_BYTES),
+            min(slots, -(-n_bytes // self._FILE_MIN_BYTES)),
+        )
+
+    def next_partitions(self) -> int | None:
+        """Files (and merge partitions) of the next version, sized from
+        the current version's base; None while no version exists."""
+        v = self.current_version()
+        return self._files_for(self._bytes([f"v={v}"])) if v > 0 else None
+
+    def _write(self, df: DataFrame, rel: str) -> None:
+        # overwrite, not errorifexists: a crash before the pointer flip
+        # must let the replayed batch rewrite ITS OWN half-written
+        # directory (the name is deterministic per target version);
+        # once the pointer advances past it the name can never recur
+        (
+            df.write.mode("overwrite")
+            .option("parquet.enable.dictionary", "false")
+            .parquet(os.path.join(self.path, rel))
+        )
+
     def commit(self, df: DataFrame, append: DataFrame | None = None) -> int:
         """Write version N+1. With `append`, its rows become a NEW
         write-once segment linked after the current version's segments;
@@ -173,40 +223,26 @@ class ReplicaStore:
         segs: list[str] = []
         if append is not None:
             inherited = list(self._manifest(self.current_version()))
-            # overwrite, not errorifexists: a crash between segment
-            # write and pointer flip must let the replayed batch
-            # rewrite ITS OWN half-written segment (the name is
-            # deterministic per target version); once the pointer
-            # advances past v the name can never recur
             if len(inherited) + 1 > self.compact_after:
                 # fold inherited segments ∪ new rows into ONE segment,
-                # sized from the measured inherited bytes (B76 idiom)
+                # sized from the measured inherited bytes
                 paths = [os.path.join(self.path, s) for s in inherited]
                 folded = (
                     self.spark.read.schema(_footer_schema(paths))
                     .parquet(*paths)
                     .unionByName(append)
                 )
-                n_bytes = sum(
-                    os.path.getsize(os.path.join(root, fn))
-                    for p in paths
-                    for root, _dirs, files in os.walk(p)
-                    for fn in files
-                    if fn.endswith(".parquet")
-                )
-                n_files = max(1, -(-n_bytes // self._COMPACT_TARGET_BYTES))
                 seg_rel = os.path.join("seg", f"c{v:06d}")
-                folded.repartition(n_files).write.mode("overwrite").parquet(
-                    os.path.join(self.path, seg_rel)
+                self._write(
+                    folded.repartition(self._files_for(self._bytes(inherited))),
+                    seg_rel,
                 )
                 segs = [seg_rel]
             else:
                 seg_rel = os.path.join("seg", f"b{v:06d}")
-                append.write.mode("overwrite").parquet(
-                    os.path.join(self.path, seg_rel)
-                )
+                self._write(append, seg_rel)
                 segs = inherited + [seg_rel]
-        df.write.mode("overwrite").parquet(os.path.join(self.path, f"v={v}"))
+        self._write(df, f"v={v}")
         if segs:
             with open(os.path.join(self.path, f"v={v}", "_segments"), "w") as f:
                 f.write("\n".join(segs))
@@ -315,6 +351,7 @@ class CDCPipeline:
             key_cols=self.key_cols,
             order_cols=self.order_cols,
             keep_tombstones=self.keep_tombstones,
+            partitions=self.store.next_partitions(),
         )
         if replica is None:
             merged = snapshot_latest(feed, **merge)

@@ -267,3 +267,32 @@ def test_archive_scan_is_partition_pruned(spark, sf_dir, tmp_path):
     n_days_all = spark.read.parquet(path).select("event_date").distinct().count()
     n_days_read = asof.select("event_date").distinct().count()
     assert 0 < n_days_read < n_days_all
+
+
+def test_partitioned_apply_shuffles_once_on_the_key(spark):
+    """`apply_incremental(..., partitions=n)` runs exactly one shuffle
+    exchange, `hashpartitioning(pk, n)`, shared by the union and the
+    latest-wins window, and AQE keeps all n partitions."""
+    import re
+
+    from greenplum_cdc_spark.operators.cdc import apply_incremental
+
+    n = 3
+    replica = spark.range(2000).selectExpr(
+        "id AS pk", "timestamp_seconds(id) AS ts", "id AS seq",
+        "0 AS subseq", "CAST(id AS string) AS v",
+    )
+    batch = spark.range(0, 2000, 7).selectExpr(
+        "id AS pk", "timestamp_seconds(id + 5000) AS ts", "id + 5000 AS seq",
+        "1 AS subseq", "IF(id % 2 = 0, 'delete', 'update') AS op", "'x' AS v",
+    )
+    merged = apply_incremental(
+        replica, batch, order_cols=("ts", "seq", "subseq"), partitions=n
+    )
+    assert merged.rdd.getNumPartitions() == n
+    merged.collect()
+    final = merged._jdf.queryExecution().executedPlan().executedPlan().toString()
+    exchanges = re.findall(r"Exchange (\w+\([^)]*\))", final)
+    assert len(exchanges) == 1, final
+    assert re.fullmatch(rf"hashpartitioning\(pk#\d+L?, {n}\)", exchanges[0])
+    assert "AQEShuffleRead" not in final

@@ -704,6 +704,29 @@ def test_append_store_reads_across_compaction_fold(spark, tmp_path):
         _assert_read_is_plan_only(spark, store, v)
 
 
+def test_append_store_files_have_no_dictionary_pages(spark, tmp_path):
+    """Bases, append segments and a compaction fold are all written
+    without dictionary pages, even for a low-cardinality column."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    store = ReplicaStore(spark, str(tmp_path / "rep"), compact_after=2)
+    rows = spark.range(200).selectExpr("id AS pk", "IF(id % 2 = 0, 'a', 'b') AS s")
+    for _ in range(3):
+        store.commit(rows, append=rows)
+    assert any(
+        d.startswith("c") for d in os.listdir(os.path.join(store.path, "seg"))
+    )
+    paths = glob.glob(os.path.join(store.path, "**", "*.parquet"), recursive=True)
+    assert paths
+    for path in paths:
+        meta = pq.ParquetFile(path).metadata
+        for rg in range(meta.num_row_groups):
+            for c in range(meta.num_columns):
+                assert not meta.row_group(rg).column(c).has_dictionary_page, path
+
+
 def test_time_travel_reads_each_version_with_its_own_schema(spark, tmp_path):
     """DDL evolution: v2 adds a column; reading v1 keeps v1's columns
     and nested nullability, v2 has the new column, neither runs a job."""
@@ -742,3 +765,156 @@ def test_version_without_spark_footer_raises(spark, tmp_path):
         f.write("1")
     with pytest.raises(ReplicaSchemaMissing):
         store.read()
+
+
+# ---- versions are key-hash-distributed, key-sorted files ----
+
+
+def _big_polls(n_keys, n_polls, per_poll, seed=7):
+    """Maxwell JSON-line polls over `n_keys` keys — poll 0 inserts every
+    key with a high-cardinality payload, later polls update, delete and
+    re-insert random keys — and the latest-wins replay after each poll."""
+    import json
+    import random
+
+    rnd = random.Random(seed)
+    replay: dict[int, str] = {}
+    polls, replays, i = [], [], 0
+    for n in range(n_polls):
+        lines = []
+        events = (
+            [(pk, "insert") for pk in range(n_keys)] if n == 0 else
+            [(rnd.randrange(n_keys + 50), rnd.choice(["update", "delete", "insert"]))
+             for _ in range(per_poll)]
+        )
+        for pk, op in events:
+            i += 1
+            value = f"{rnd.getrandbits(64):016x}"
+            lines.append(json.dumps(_maxwell_line(i, pk, op, value)))
+            if op == "delete":
+                replay.pop(pk, None)
+            else:
+                replay[pk] = value
+        polls.append(lines)
+        replays.append(dict(replay))
+    return polls, replays
+
+
+def _version_files(store, v):
+    d = os.path.join(store.path, f"v={v}")
+    return sorted(
+        os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
+    )
+
+
+def _files_by_rule(spark, n_bytes):
+    """Files the replica layout rule gives a version replacing `n_bytes`."""
+    slots = spark.sparkContext.defaultParallelism
+    return max(-(-n_bytes // (128 << 20)), min(slots, -(-n_bytes // (128 << 10))))
+
+
+def _assert_layout(spark, store, v, replay):
+    """Version `v`'s part files hold disjoint, ascending pk sets, carry no
+    dictionary page, and read back as `replay`."""
+    import pyarrow.parquet as pq
+
+    seen: set[int] = set()
+    for path in _version_files(store, v):
+        f = pq.ParquetFile(path)
+        pks = f.read(columns=["pk"]).column("pk").to_pylist()
+        assert pks == sorted(pks) and len(set(pks)) == len(pks)
+        assert seen.isdisjoint(pks)
+        seen.update(pks)
+        meta = f.metadata
+        for rg in range(meta.num_row_groups):
+            for c in range(meta.num_columns):
+                assert not meta.row_group(rg).column(c).has_dictionary_page, (
+                    path, meta.row_group(rg).column(c).path_in_schema
+                )
+    got = {
+        r["pk"]: r["value"]
+        for r in store.read(version=v)
+        .select("pk", F.col("data")["value"].alias("value"))
+        .collect()
+    }
+    assert got == replay
+
+
+def test_replica_versions_are_key_distributed_one_file_per_slot(spark, tmp_path):
+    """Through several polls over a replica above the 128 KB floor, each
+    version has the layout rule's file count (at most one per task
+    slot), its files hold disjoint pk sets in ascending pk order with no
+    dictionary pages, and its read equals the latest-wins replay."""
+    polls, replays = _big_polls(n_keys=30000, n_polls=4, per_poll=1500)
+    pipe = CDCPipeline(spark, str(tmp_path / "rep"))
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    multi = 0
+    for n, lines in enumerate(polls):
+        prev_bytes = (
+            sum(os.path.getsize(p) for p in _version_files(pipe.store, n))
+            if n else None
+        )
+        (in_dir / f"poll{n}.json").write_text("\n".join(lines) + "\n")
+        pipe.run_available(str(in_dir), str(tmp_path / "ckpt"))
+        assert pipe.store.current_version() == n + 1
+        if prev_bytes is not None:
+            assert prev_bytes > 128 << 10
+            want = _files_by_rule(spark, prev_bytes)
+            assert len(_version_files(pipe.store, n + 1)) == want
+            assert want <= spark.sparkContext.defaultParallelism
+            multi += want > 1
+        _assert_layout(spark, pipe.store, n + 1, replays[n])
+    assert multi == len(polls) - 1
+
+
+def test_small_replica_stays_one_file(spark, tmp_path):
+    """A replica under the 128 KB floor is rewritten as one file."""
+    pipe = CDCPipeline(spark, str(tmp_path / "rep"))
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    for n, lines in enumerate(_poll_feeds(_maxwell_line, _TWO_POLLS)):
+        (in_dir / f"poll{n}.json").write_text("\n".join(lines) + "\n")
+        pipe.run_available(str(in_dir), str(tmp_path / "ckpt"))
+        assert pipe.store.next_partitions() == 1
+        assert len(_version_files(pipe.store, n + 1)) == 1
+
+
+def test_time_travel_across_the_layout_change(spark, tmp_path):
+    """A version written as one dictionary-encoded file by a plain
+    `df.write.parquet` and the distributed version a poll commits over
+    it each read back as their own replay."""
+    import pyarrow.parquet as pq
+
+    polls, replays = _big_polls(n_keys=20000, n_polls=2, per_poll=1500, seed=11)
+    seed_in = tmp_path / "seed_in"
+    seed_in.mkdir()
+    (seed_in / "poll0.json").write_text("\n".join(polls[0]) + "\n")
+    seed = CDCPipeline(spark, str(tmp_path / "seed"))
+    seed.run_available(str(seed_in), str(tmp_path / "seed_ckpt"))
+
+    rep = tmp_path / "rep"
+    seed.store.read().coalesce(1).write.parquet(str(rep / "v=1"))
+    (rep / "_LATEST").write_text("1")
+    pipe = CDCPipeline(spark, str(rep))
+    [old] = _version_files(pipe.store, 1)
+    meta = pq.ParquetFile(old).metadata
+    assert any(
+        meta.row_group(0).column(c).has_dictionary_page
+        for c in range(meta.num_columns)
+    )
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "poll1.json").write_text("\n".join(polls[1]) + "\n")
+    pipe.run_available(str(in_dir), str(tmp_path / "ckpt"))
+    assert pipe.store.current_version() == 2
+    assert len(_version_files(pipe.store, 2)) > 1
+    _assert_layout(spark, pipe.store, 2, replays[1])
+    got_v1 = {
+        r["pk"]: r["value"]
+        for r in pipe.store.read(version=1)
+        .select("pk", F.col("data")["value"].alias("value"))
+        .collect()
+    }
+    assert got_v1 == replays[0]

@@ -6,13 +6,24 @@ names, and order-insensitive values (columns sorted by name, rows sorted).
 Exact equality is required for non-floats; floats must match to 1e-9
 relative (we design queries to be bit-identical — see plans/tpch.py).
 
+DuckDB runs in this process with a bounded memory budget and spills
+into a temporary directory that is removed at exit: left at its
+defaults it may take 80% of the host's RAM and spills into ``.tmp/``
+under the working directory, which nothing removes. A watchdog
+interrupts the running oracle once the spill passes its cap, so that
+oracle FAILs instead of filling the disk.
+
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
 import math
+import os
+import signal
 import sys
+import tempfile
+import threading
 
 import duckdb
 
@@ -21,6 +32,14 @@ sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod  # noqa: E402
 from greenplum_cdc_spark.io import TABLES  # noqa: E402
 from greenplum_cdc_spark.session import get_spark  # noqa: E402
+
+# DuckDB's budget: an oracle that needs more memory spills to disk, and
+# one that spills more than the cap is interrupted, so it fails instead
+# of exhausting the host's memory or disk (k-core's oracle at 10x scale
+# did both). The cap is enforced here because DuckDB 1.0's own
+# `max_temp_directory_size` let a sort capped at 300 MB spill past 1 GB.
+DUCKDB_MEMORY_LIMIT = "2GB"
+DUCKDB_SPILL_CAP_BYTES = 1 << 30
 
 
 def _norm(v):
@@ -103,10 +122,54 @@ def main():
     args = sys.argv[1:]
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
     only = set(a for a in args if "/" not in a)
+    # `timeout` stops the gate with SIGTERM: exit through the finally
+    # blocks so the spill directory is still removed
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
+    with tempfile.TemporaryDirectory(prefix="duckdb-spill-") as spill:
+        con = duckdb.connect(config={
+            "memory_limit": DUCKDB_MEMORY_LIMIT,
+            "temp_directory": spill,
+        })
+        stop = threading.Event()
+        watchdog = threading.Thread(
+            target=_cap_spill, args=(con, spill, stop), daemon=True
+        )
+        watchdog.start()
+        try:
+            return run_gate(con, sf_dir, only)
+        finally:
+            stop.set()
+            watchdog.join()
+            con.close()
 
-    con = duckdb.connect()
-    import os
 
+def _spill_bytes(spill: str) -> int:
+    total = 0
+    for entry in os.scandir(spill):
+        try:
+            total += entry.stat().st_blocks * 512
+        except FileNotFoundError:  # DuckDB removed it meanwhile
+            pass
+    return total
+
+
+def _cap_spill(con, spill: str, stop: threading.Event) -> None:
+    """Interrupt the running DuckDB query whenever `spill` holds more
+    than DUCKDB_SPILL_CAP_BYTES."""
+    while not stop.wait(0.05):
+        if _spill_bytes(spill) > DUCKDB_SPILL_CAP_BYTES:
+            print(
+                f"duckdb spill passed {DUCKDB_SPILL_CAP_BYTES >> 20} MB: "
+                "interrupting the running oracle", flush=True,
+            )
+            con.interrupt()
+            while not stop.wait(0.05) and (
+                _spill_bytes(spill) > DUCKDB_SPILL_CAP_BYTES
+            ):
+                pass
+
+
+def run_gate(con, sf_dir: str, only: set[str]) -> int:
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         # Spark writes tables as part-file directories; DuckDB needs the glob
