@@ -83,6 +83,22 @@ _INFERENCE_CONFS = (
 )
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """The file `load_table(spark, sf_dir, name)` reads."""
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _infer_schema(spark: SparkSession, path: str) -> StructType:
+    # A new identity of `path` may be a rewrite in place: relations
+    # cached over its old contents (persisted frames, Spark's cache
+    # registry) are refreshed, or a plan over the same path would
+    # `sameResult` into the old rows.
+    spark.catalog.refreshByPath(path)
+    return spark.read.parquet(path).schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """`<sf_dir>/<name>.parquet` as a lazy frame, with every timestamp
     column as TIMESTAMP (LTZ) at microsecond precision.
@@ -92,9 +108,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     and memoized (`memo.get_or_build("parquet_schema", ...)`); the read
     itself passes that schema, so every later load of an unchanged file
     plans without a Spark job, and a file rewritten in place is
-    inferred again."""
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    inferred again, with the relations cached over its old contents
+    refreshed."""
+    path = table_path(sf_dir, name)
     # The driver may hand us a vanilla session; without this, parquet
     # TIMESTAMP(NANOS) columns (events.ts) abort the scan. Runtime-settable.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -104,11 +120,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # and every time function (unix_micros, window, watermark) expects
     # the LTZ type.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    path = os.path.join(sf_dir, f"{name}.parquet")
     schema = memo.get_or_build(
         "parquet_schema",
         [path],
-        lambda: spark.read.parquet(path).schema,
+        lambda: _infer_schema(spark, path),
         extra=tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS),
     )
     df = spark.read.schema(schema).parquet(path)

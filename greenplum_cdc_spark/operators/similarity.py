@@ -20,12 +20,11 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..io import load_table
+from .. import memo
+from ..io import load_table, table_path
 
 DIM = 64
 N_PLANES = 8
@@ -61,26 +60,16 @@ def _with_norm(vecs: DataFrame) -> DataFrame:
     return vecs.withColumn("norm", F.sqrt(_dot("embedding", "embedding")))
 
 
-# query-side memo for `_np_query_scores`: the collected (qids, qm)
-# matrix is a pure function of the embeddings table (deterministic
-# testdata) and tiny (|queries| x DIM float64); without it every plan
-# CONSTRUCTION re-ran the eager filter+toPandas Spark job — the same
-# eager-at-build smell the module's own nq comment calls out, paid per
-# invocation by C6/C93/C94 (ADVICE r10). Same lifetime/keying as
-# _IVF_TRAIN_CACHE: dies with the process, keyed on the sf_dir path.
-_NP_QUERY_SIDE_CACHE: dict = {}
-
-
 def _np_query_scores(
-    vecs: DataFrame, n_queries: int, dims: tuple = (), cache_key: str = None
+    spark: SparkSession, sf_dir: str, n_queries: int, dims: tuple = ()
 ) -> DataFrame:
-    """The C6 shape — every corpus vector scored against the broadcast
-    query set (``vec_id < n_queries``, self-pairs excluded) — with the
-    |corpus| x |queries| interpreted HOF fold-dots replaced by one
-    numpy pass per task (guide §4.2; the C116 ``_pop_topk_edges``
+    """The C6 shape — every corpus vector of `sf_dir`'s embeddings
+    scored against the broadcast query set (``vec_id < n_queries``,
+    self-pairs excluded) — with the |corpus| x |queries| interpreted
+    HOF fold-dots replaced by one numpy pass per task (guide §4.2; the C116 ``_pop_topk_edges``
     recipe). Returns (query_id, neighbor_id, cos_sim), or with
     ``dims`` one row per prefix budget d with a ``dim_budget`` column
-    (the C93 matryoshka stack).
+    (the C93 matryoshka stack); no rows when no vector is a query.
 
     Bit-identity with the fold formulation is EXACT, not approximate:
     dot products AND both norms accumulate dimension-by-dimension
@@ -99,23 +88,34 @@ def _np_query_scores(
     import numpy as np
     import pandas as pd
 
-    memo_key = (cache_key, n_queries) if cache_key is not None else None
-    got = _NP_QUERY_SIDE_CACHE.get(memo_key) if memo_key else None
-    if got is None:
+    vecs = load_table(spark, sf_dir, "embeddings")
+
+    def query_side():
         side = (
             vecs.filter(F.col("vec_id") < n_queries)
             .select("vec_id", "embedding")
             .toPandas()
         )
-        got = (
-            side["vec_id"].to_numpy(),
-            np.stack(side["embedding"].to_numpy()).astype(np.float64),
-        )
-        if memo_key:
-            _NP_QUERY_SIDE_CACHE[memo_key] = got
-    qids_all, qm_all = got
+        emb = side["embedding"].to_numpy()
+        qm = np.stack(emb) if len(emb) else np.empty((0, DIM))
+        return side["vec_id"].to_numpy(), qm.astype(np.float64)
+
+    # The collected query side is a pure function of the embeddings
+    # file and tiny (|queries| x DIM); memoized so a plan construction
+    # does not re-run its eager filter+toPandas job.
+    qids_all, qm_all = memo.get_or_build(
+        "np_query_side",
+        [table_path(sf_dir, "embeddings")],
+        query_side,
+        extra=(n_queries,),
+    )
     budgets = tuple(dims) or (DIM,)
     with_budget = bool(dims)
+    schema = "query_id bigint, neighbor_id bigint, cos_sim double"
+    if with_budget:
+        schema += ", dim_budget int"
+    if not len(qids_all):
+        return spark.createDataFrame([], schema)
 
     def score(batches, qids=qids_all, qm=qm_all, budgets=budgets, wb=with_budget):
         qcols = [qm[:, d] for d in range(DIM)]
@@ -152,9 +152,6 @@ def _np_query_scores(
                 frames.append(pd.DataFrame(f))
             yield pd.concat(frames, ignore_index=True)
 
-    schema = "query_id bigint, neighbor_id bigint, cos_sim double"
-    if with_budget:
-        schema += ", dim_budget int"
     return vecs.select("vec_id", "embedding").mapInPandas(score, schema=schema)
 
 
@@ -233,10 +230,7 @@ def knn_cosine_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C6: brute-force cosine top-k — broadcast queries, one corpus
     scan; scoring vectorized via `_np_query_scores` (r10), ranking in
     the JVM window exactly as before."""
-    vecs = load_table(spark, sf_dir, "embeddings")
-    scored = _np_query_scores(
-        vecs, N_QUERIES, cache_key=os.path.abspath(sf_dir)
-    )
+    scored = _np_query_scores(spark, sf_dir, N_QUERIES)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )
@@ -376,21 +370,16 @@ def _ivf_assign(vecs: DataFrame) -> DataFrame:
     return _ivf_assign_to(vecs, _ivf_train(vecs))
 
 
-# training memo: the quantizer is a pure function of the embeddings
-# table (deterministic testdata), and its eager collect is ~0.8 s per
-# invocation that knn_ivf / ivf_recall_sweep / knn_ivfpq would each
-# re-pay every bench rep; plain-Python Decimals, so caching is safe
-# across Spark sessions (same pattern as the scaffold's _FEED_CACHE)
-_IVF_TRAIN_CACHE: dict[str, dict] = {}
-
-
 def _ivf_train_cached(spark: SparkSession, sf_dir: str) -> dict:
-    key = os.path.abspath(sf_dir)
-    got = _IVF_TRAIN_CACHE.get(key)
-    if got is None:
-        got = _ivf_train(load_table(spark, sf_dir, "embeddings"))
-        _IVF_TRAIN_CACHE[key] = got
-    return got
+    # The quantizer is a pure function of the embeddings file, and its
+    # eager collect is ~0.8 s that knn_ivf / ivf_recall_sweep /
+    # knn_ivfpq would each re-pay; plain-Python Decimals, so the value
+    # is not bound to a session.
+    return memo.get_or_build(
+        "ivf_train",
+        [table_path(sf_dir, "embeddings")],
+        lambda: _ivf_train(load_table(spark, sf_dir, "embeddings")),
+    )
 
 
 def _ivf_train(vecs: DataFrame) -> dict:
@@ -2250,9 +2239,7 @@ def embedding_dim_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one numpy pass emits the whole (dim_budget, cos) stack — prefix
     # snapshots at each budget boundary, bit-identical to the former
     # per-budget _dot_pfx folds (r10, see _np_query_scores)
-    stacked = _np_query_scores(
-        vecs, N_QUERIES, dims=all_dims, cache_key=os.path.abspath(sf_dir)
-    )
+    stacked = _np_query_scores(spark, sf_dir, N_QUERIES, dims=all_dims)
     w = Window.partitionBy("dim_budget", "query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )
@@ -2397,9 +2384,7 @@ def ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # argument (per-dim accumulation == the fold's left-assoc IEEE
     # order — driver-proven on C6's raw cosines), and self-pairs are
     # excluded in both formulations.
-    scored_all = _np_query_scores(
-        vecs, IVF_QUERIES, cache_key=os.path.abspath(sf_dir)
-    )
+    scored_all = _np_query_scores(spark, sf_dir, IVF_QUERIES)
     corpus_cells = _ivf_assign_to(vecs, by_cell).select(
         F.col("vec_id").alias("neighbor_id"), "cell"
     )
@@ -2437,7 +2422,7 @@ def ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.desc("cos_sim"), F.asc("neighbor_id")
     )
     truth = (
-        _np_query_scores(vecs, IVF_QUERIES, cache_key=os.path.abspath(sf_dir))
+        _np_query_scores(spark, sf_dir, IVF_QUERIES)
         .withColumn("rank", F.row_number().over(w_truth))
         .filter(F.col("rank") <= IVF_TOPK)
         .select("query_id", "neighbor_id")

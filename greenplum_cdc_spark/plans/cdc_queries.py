@@ -2320,41 +2320,33 @@ ORDER BY key
 _W2J_TXN = 3  # events per synthetic transaction (event_id div 3)
 
 
-_SYNTH_CACHE: dict[tuple, str] = {}
-
-
 def _synth_feed(
     entry: str, df: DataFrame, sf_dir: str, fmt: str = "text"
 ) -> DataFrame:
-    """Materialize a synthesized feed to session-lifetime scratch, timed
-    under ``phase(entry, "synth")`` so bench charges the corpus
-    generator separately from the operator (VERDICT r5 item 3: half of
-    wal2json_v2_parse_events' bench line was feed synthesis). Reading
-    the corpus back from disk is also the honest operator input — a
-    real deployment parses a LANDED feed, not the generator's
-    expression tree fused into the parse job."""
-    import atexit
-    import shutil
-    import tempfile
-
+    """Materialize a synthesized feed to scratch once per identity of
+    ``sf_dir`` (``cached_feed``), timed under ``phase(entry, "synth")``
+    so bench charges the corpus generator separately from the operator
+    (VERDICT r5 item 3: half of wal2json_v2_parse_events' bench line was
+    feed synthesis). Reading the corpus back from disk is also the
+    honest operator input — a real deployment parses a LANDED feed, not
+    the generator's expression tree fused into the parse job."""
     from ..phases import phase, reset
+    from ..streaming.scaffold import cached_feed
 
     reset(entry)
-    spark = df.sparkSession
-    cache_key = (entry, sf_dir, fmt)
-    out = _SYNTH_CACHE.get(cache_key)
-    if out is None:
-        root = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        out = tempfile.mkdtemp(prefix=f"feed_{entry[:24]}_", dir=root)
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
+
+    def write(out: str) -> None:
         with phase(entry, "synth"):
             # 8 files so the parse stage gets real parallelism (a lazy
             # single-file feed read throttled the operator to 1-2 tasks)
+            w = df.repartition(8).write.mode("overwrite")
             if fmt == "text":
-                df.repartition(8).write.mode("overwrite").text(out)
+                w.text(out)
             else:
-                df.repartition(8).write.mode("overwrite").parquet(out)
-        _SYNTH_CACHE[cache_key] = out
+                w.parquet(out)
+
+    out = cached_feed(sf_dir, entry, write)
+    spark = df.sparkSession
     if fmt == "text":
         return spark.read.schema("line string").text(out)
     return spark.read.parquet(out)

@@ -508,7 +508,7 @@ def _drain_replicas(
             with phase(key, "synth"):
                 lines().write.mode("overwrite").text(d)
 
-        in_dir = cached_feed((key, sf_dir), _write)
+        in_dir = cached_feed(sf_dir, key, _write)
         with shuffle_partitions(spark, 2):
             pipe = make_pipe(base)
             pipe.run_available(in_dir, os.path.join(base, "ckpt"))
@@ -879,9 +879,7 @@ def stream_fanout_heterogeneous(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "overwrite"
                 ).text(d)
 
-        in_dir = cached_feed(
-            ("stream_fanout_heterogeneous", sf_dir), _write
-        )
+        in_dir = cached_feed(sf_dir, "stream_fanout_heterogeneous", _write)
         with shuffle_partitions(spark, 2):
             pipe = HeterogeneousFanoutPipeline(
                 spark,
@@ -1095,7 +1093,7 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).unionByName(echoes.withColumn("_tag", F.lit(2)))
             write_mtime_batches(tagged, F.col("_tag"), 3, d, drop=("_tag",))
 
-        glob = cached_feed(("stream_late_data", sf_dir), _write) + "/_b=*"
+        glob = cached_feed(sf_dir, "stream_late_data", _write) + "/_b=*"
 
         stream = (
             spark.readStream.schema(ev.schema)
@@ -1290,7 +1288,7 @@ def stream_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_ev.unpersist()
 
         glob = (
-            cached_feed(("stream_update_mode_counts", sf_dir, 2), _write)
+            cached_feed(sf_dir, "stream_update_mode_counts", _write)
             + "/_b=*"
         )
         stream = (
@@ -1390,7 +1388,8 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         s1 = F.lit(_OJ_S1).cast("timestamp")
         glob = (
             cached_feed(
-                ("stream_outer_join", sf_dir, 2),
+                sf_dir,
+                "stream_outer_join",
                 lambda d: write_mtime_batches(
                     ev,
                     F.when(F.col("ts") <= s1, 0).otherwise(1),
@@ -2036,7 +2035,7 @@ def stream_scd2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             ev.unpersist()
 
-        glob = cached_feed(("stream_scd2_pipeline", sf_dir, 2), _write) + "/_b=*"
+        glob = cached_feed(sf_dir, "stream_scd2_pipeline", _write) + "/_b=*"
         store = ReplicaStore(spark, os.path.join(base, "replica"))
 
         _merge = scd2_merge_fn(store)

@@ -128,7 +128,8 @@ def stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         in_dir = cached_feed(
-            ("stream_dedup_stateful", sf_dir),
+            sf_dir,
+            "stream_dedup_stateful",
             lambda d: docs.coalesce(1).write.mode("overwrite").parquet(d),
         )
         # r11: memory sink instead of foreachBatch parquet + adopt
@@ -304,7 +305,7 @@ def stream_sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.unpersist()
 
         glob = (
-            cached_feed(("stream_sessionize_stateful", sf_dir), _write)
+            cached_feed(sf_dir, "stream_sessionize_stateful", _write)
             + "/_b=*"
         )
         # 16 state-store tasks: with scratch on tmpfs the per-task store
@@ -401,7 +402,8 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
         dups = ev.filter(F.col("event_id") % 5 == 0)
         in_dir = cached_feed(
-            ("stream_dedup_watermark", sf_dir),
+            sf_dir,
+            "stream_dedup_watermark",
             lambda d: ev.unionByName(dups)
             .coalesce(1)
             .write.mode("overwrite")
@@ -575,7 +577,7 @@ def stream_running_totals_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.unpersist()
 
         glob = (
-            cached_feed(("stream_running_totals", sf_dir, 2), _write)
+            cached_feed(sf_dir, "stream_running_totals", _write)
             + "/_b=*"
         )
         schema = "user_id long, ts_us long, value_cents long"
@@ -739,7 +741,7 @@ def stream_rate_limit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.unpersist()
 
         glob = (
-            cached_feed(("stream_rate_limit", sf_dir), _write) + "/_b=*"
+            cached_feed(sf_dir, "stream_rate_limit", _write) + "/_b=*"
         )
         stream = (
             spark.readStream.schema("user_id long, ts_us long")
@@ -980,7 +982,7 @@ def stream_heavy_hitters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             write_mtime_batches(counts, F.col("_tag"), 2, d, drop=("_tag",))
 
         glob = (
-            cached_feed(("stream_heavy_hitters", sf_dir), _write)
+            cached_feed(sf_dir, "stream_heavy_hitters", _write)
             + "/_b=*"
         )
         stream = (
@@ -1360,7 +1362,7 @@ def stream_nearest_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             feed.unpersist()
 
         glob = (
-            cached_feed(("stream_nearest_join", sf_dir), _write) + "/_b=*"
+            cached_feed(sf_dir, "stream_nearest_join", _write) + "/_b=*"
         )
         # r11: drain into a memory sink instead of the foreachBatch
         # parquet sink + adopt (the r9 running_totals finding: the

@@ -246,3 +246,43 @@ def test_materialize_reads_back_without_a_job(spark):
     written = os.path.dirname(out.inputFiles()[0])
     assert out.schema == spark.read.parquet(written).schema
     assert sorted(r.id for r in out.collect()) == list(range(5))
+
+
+# ---- every memoized value follows a rewrite of its inputs ----
+
+# entry -> the memo its second call must rebuild after the rewrite
+_REBUILT_BY = {
+    "stream_cdc_pipeline": "feed",
+    "wal2json_parse_events": "feed",
+    "dedup_clusters": "cluster_labels",
+    "knn_ivf": "ivf_train",
+    "knn_cosine_bruteforce": "np_query_side",
+}
+
+
+def test_rewritten_inputs_rebuild_every_memo(spark, sf_copy, oracle_problems):
+    """Each entry equals its oracle, the tables it reads are rewritten
+    in place (every other row kept, so the query vectors change too),
+    and each entry equals its oracle on the new files again: no
+    memoized value, and no relation cached over the old files (dedup's
+    `_swap_persist` slots stay in place), serves the pre-rewrite
+    answer."""
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    for name in _REBUILT_BY:
+        assert oracle_problems(sf_copy, name, qs[name](spark, sf_copy)) == [], name
+    before = memo.stats()
+    for t in ("events", "embeddings", "documents"):
+        path = os.path.join(sf_copy, f"{t}.parquet")
+        table = pq.read_table(path)
+        pq.write_table(table.take(list(range(0, table.num_rows, 2))), path)
+    stale = {}
+    for name in _REBUILT_BY:
+        problems = oracle_problems(sf_copy, name, qs[name](spark, sf_copy))
+        if problems:
+            stale[name] = problems
+    assert not stale, f"served from the pre-rewrite inputs: {stale}"
+    after = memo.stats()
+    for name in set(_REBUILT_BY.values()) | {"parquet_schema"}:
+        assert after[name]["misses"] > before.get(name, {"misses": 0})["misses"], name

@@ -261,7 +261,7 @@ def test_np_query_scores_matches_folds(spark):
     dims = (8, DIM)
     got = {
         (r["query_id"], r["neighbor_id"], r["dim_budget"]): repr(r["cos_sim"])
-        for r in _np_query_scores(vecs, N_QUERIES, dims=dims).collect()
+        for r in _np_query_scores(spark, SF, N_QUERIES, dims=dims).collect()
     }
     base = vecs.select(
         "vec_id",

@@ -590,15 +590,20 @@ class TestStreamingScaffold:
                 df, F.lit(0), 3, str(tmp_path / "feed2")
             )
 
-    def test_cached_feed_writes_once(self):
+    def test_cached_feed_writes_once(self, tmp_path):
         from greenplum_cdc_spark.streaming.scaffold import cached_feed
 
         calls = []
-        key = ("test_cached_feed_writes_once", "k1")
-        d1 = cached_feed(key, lambda d: calls.append(d))
-        d2 = cached_feed(key, lambda d: calls.append(d))
+        src = tmp_path / "events.parquet"
+        src.write_bytes(b"v1")
+        key = "test_cached_feed_writes_once"
+        d1 = cached_feed(str(src), key, lambda d: calls.append(d))
+        d2 = cached_feed(str(src), key, lambda d: calls.append(d))
         assert d1 == d2
         assert calls == [d1]
+        src.write_bytes(b"v2, rewritten")  # a rewritten input writes again
+        d3 = cached_feed(str(src), key, lambda d: calls.append(d))
+        assert calls == [d1, d3] and d3 != d1
 
 
 # --- item 4: the protobuf bridge that un-gated C48 -----------------------

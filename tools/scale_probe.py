@@ -8,9 +8,9 @@ tables into /tmp (never touches /root/testdata). Usage:
 
     python tools/scale_probe.py [sf_dir] [op ...] [--warm]
 
-COLD-vs-COLD is the default (round 8, VERDICT r7 item 5): library
-memo caches (_swap_persist slots, the IVF/PQ quantizer training memo)
-and the Spark cache are cleared before EVERY timed run, so the 1x
+COLD-vs-COLD is the default (round 8, VERDICT r7 item 5): the
+_swap_persist slots, the one memo layer (`memo.py`) and the Spark
+cache are cleared before EVERY timed run, so the 1x
 denominator can never ride a memoized index that the bigger run must
 rebuild.  The round-7 sweep produced two false super-linear alarms
 exactly this way (lsh_band_tuning "222x", hard_negative_mining "137x"
@@ -475,12 +475,13 @@ def _sketches():
 
 def reset_caches(spark) -> None:
     """Drop every library-level memo a previous run may have left:
-    _swap_persist slots (cached index relations), the IVF/PQ quantizer
-    training memo, the one memo layer (`memo.py`: inferred table
-    schemas, bucketed tables), and Spark's own cache registry. Scratch
-    FEEDS on disk are kept — they are inputs, not computed state."""
+    the _swap_persist slots (cached index relations), every value of
+    the one memo layer (`memo.py`: inferred table schemas, bucketed
+    tables, cluster labels, quantizer training, query sides and the
+    scratch feeds, which the next run writes again), and Spark's own
+    cache registry."""
     from greenplum_cdc_spark import memo
-    from greenplum_cdc_spark.operators import dedup, similarity
+    from greenplum_cdc_spark.operators import dedup
 
     for df in list(dedup._PERSIST_CACHE.values()):
         try:
@@ -488,7 +489,6 @@ def reset_caches(spark) -> None:
         except Exception:  # noqa: BLE001 — best-effort teardown
             pass
     dedup._PERSIST_CACHE.clear()
-    similarity._IVF_TRAIN_CACHE.clear()
     memo.clear()
     spark.catalog.clearCache()
 
