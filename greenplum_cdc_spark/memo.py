@@ -9,9 +9,11 @@ of (relative name, size, mtime_ns) — so a rewrite in place, a file
 added to a directory or a path re-pointed by a symlink all miss and
 rebuild, and no caller ever invalidates anything by hand. A rebuilt
 value replaces the one its inputs had before, so a stale value is never
-kept. A value bound to one Spark session (catalog tables, cached
-relations) also passes `session`: its `applicationId` joins the key, so
-a restarted session rebuilds. `extra` carries any other input the value
+kept; a value that holds a resource (a scratch directory) passes
+`release`, which is called on the stale value a rebuild replaces. A
+value bound to one Spark session (catalog tables, cached relations)
+also passes `session`: its `applicationId` joins the key, so a
+restarted session rebuilds. `extra` carries any other input the value
 depends on, such as the session conf values that change parquet schema
 inference.
 
@@ -51,9 +53,12 @@ def get_or_build(
     build: Callable[[], Any],
     session=None,
     extra: tuple = (),
+    release: Callable[[Any], None] | None = None,
 ) -> Any:
     """`build()`'s value for the current identity of `paths` (and of
-    `session`, when given), built at most once per identity."""
+    `session`, when given), built at most once per identity. When a
+    rebuild replaces the value of an older identity, `release` is
+    called on that value."""
     reals = tuple(os.path.realpath(p) for p in paths)
     slot = (
         name,
@@ -71,7 +76,10 @@ def get_or_build(
         return held[1]
     value = build()
     with _lock:
+        replaced = _entries.get(slot)
         _entries[slot] = (ident, value)
+    if release is not None and replaced is not None and replaced[0] != ident:
+        release(replaced[1])
     return value
 
 

@@ -17,7 +17,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..io import load_table
+from ..io import _footer_schema, load_table
 from ..operators import cdc as cdc_ops
 from ..sources import maxwell
 
@@ -580,16 +580,9 @@ def cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = _feed(spark, sf_dir)
     head = feed.filter(F.col("ts") <= F.lit(_SPLIT_TS).cast("timestamp"))
     tail = feed.filter(F.col("ts") > F.lit(_SPLIT_TS).cast("timestamp"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("pk").orderBy(F.desc("ts"), F.desc("seq"))
-    compacted_head = (
-        head.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "delete"))
-        .drop("rn")
-    )
     return (
-        compacted_head.withColumn("segment", F.lit("compacted"))
+        cdc_ops.snapshot_latest(head)
+        .withColumn("segment", F.lit("compacted"))
         .unionByName(tail.withColumn("segment", F.lit("tail")))
         .select("pk", "ts", "seq", "op", "value", "event_type", "segment")
         .orderBy("pk", "ts", "seq")
@@ -687,17 +680,13 @@ def cdc_txn_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition widths are bounded (txn size, key history), so the shape
     survives 100 TB.
     """
-    from pyspark.sql import Window
-
     feed = _feed(spark, sf_dir).withColumn("xid", F.expr(f"seq div {_TXN_SIZE}"))
     commit_ts = F.max("ts").over(Window.partitionBy("xid"))
     committed = feed.withColumn("commit_ts", commit_ts).filter(
         F.col("commit_ts") <= F.lit(_SPLIT_TS).cast("timestamp")
     )
-    w = Window.partitionBy("pk").orderBy(F.desc("ts"), F.desc("seq"))
     return (
-        committed.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "delete"))
+        cdc_ops.snapshot_latest(committed)
         .select(
             "pk",
             F.col("ts").alias("last_ts"),
@@ -808,6 +797,14 @@ ORDER BY event_type
 """
 
 
+def _routed_table():
+    """The logical table an event routes to, derived from its
+    event_type (the stand-in for the envelope's table field)."""
+    return F.when(
+        F.col("event_type").isin("purchase", "signup"), F.lit("accounts")
+    ).otherwise(F.lit("activity"))
+
+
 def cdc_table_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A20: multi-table routing — one pass applies EVERY table's feed.
 
@@ -821,17 +818,9 @@ def cdc_table_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Table assignment derives deterministically from the event
     (event_type → logical table), standing in for the envelope field.
     """
-    from pyspark.sql import Window
-
-    feed = _feed(spark, sf_dir).withColumn(
-        "table_name",
-        F.when(F.col("event_type").isin("purchase", "signup"), F.lit("accounts"))
-        .otherwise(F.lit("activity")),
-    )
-    w = Window.partitionBy("table_name", "pk").orderBy(F.desc("ts"), F.desc("seq"))
+    feed = _feed(spark, sf_dir).withColumn("table_name", _routed_table())
     return (
-        feed.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "delete"))
+        cdc_ops.snapshot_latest(feed, key_cols=("table_name", "pk"))
         .select(
             "table_name",
             "pk",
@@ -1920,13 +1909,7 @@ def cdc_consistent_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     global across tables for exactly this reason; this operator is the
     multi-speed generalization.
     """
-    from pyspark.sql import Window
-
-    feed = _feed(spark, sf_dir).withColumn(
-        "table_name",
-        F.when(F.col("event_type").isin("purchase", "signup"), F.lit("accounts"))
-        .otherwise(F.lit("activity")),
-    )
+    feed = _feed(spark, sf_dir).withColumn("table_name", _routed_table())
     lag_expr = F.when(F.col("table_name") == "accounts", F.lit(_CUT_LAGS["accounts"])).otherwise(
         F.lit(_CUT_LAGS["activity"])
     )
@@ -1940,12 +1923,11 @@ def cdc_consistent_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max(F.unix_micros(F.col("ts"))).alias("applied_wm_us"))
     )
     cut = wm.agg(F.min("applied_wm_us").alias("cut_us"))
-    w = Window.partitionBy("table_name", "pk").orderBy(F.desc("ts"), F.desc("seq"))
+    cut_feed = feed.crossJoin(F.broadcast(cut)).filter(
+        F.unix_micros(F.col("ts")) <= F.col("cut_us")
+    )
     snap = (
-        feed.crossJoin(F.broadcast(cut))
-        .filter(F.unix_micros(F.col("ts")) <= F.col("cut_us"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "delete"))
+        cdc_ops.snapshot_latest(cut_feed, key_cols=("table_name", "pk"))
         .groupBy("table_name")
         .agg(
             F.count("*").alias("live_keys"),
@@ -2329,7 +2311,9 @@ def _synth_feed(
     (VERDICT r5 item 3: half of wal2json_v2_parse_events' bench line was
     feed synthesis). Reading the corpus back from disk is also the
     honest operator input — a real deployment parses a LANDED feed, not
-    the generator's expression tree fused into the parse job."""
+    the generator's expression tree fused into the parse job. A parquet
+    feed is read back with the schema in its own footer, so the read
+    plans without a Spark job."""
     from ..phases import phase, reset
     from ..streaming.scaffold import cached_feed
 
@@ -2349,7 +2333,7 @@ def _synth_feed(
     spark = df.sparkSession
     if fmt == "text":
         return spark.read.schema("line string").text(out)
-    return spark.read.parquet(out)
+    return spark.read.schema(_footer_schema([out])).parquet(out)
 
 
 def _wal2json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3977,8 +3961,6 @@ def cdc_snapshot_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     image pass and the tail replay share ONE pk-partitioned shuffle
     (two window ranks over the same exchange); output |keys| rows.
     """.format(ck=_CHUNK_KEYS)
-    from pyspark.sql import Window
-
     marked = _feed(spark, sf_dir).withColumn(
         "chunk", F.expr(f"pk div {_CHUNK_KEYS}")
     )
@@ -3992,12 +3974,12 @@ def cdc_snapshot_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = marked.crossJoin(F.broadcast(span)).withColumn(
         "s_k", F.expr("((chunk + 1) * mx_seq) div (mx_chunk + 1)")
     )
-    w = Window.partitionBy("pk").orderBy(F.desc("ts"), F.desc("seq"))
-    # chunk image: latest state at the select's WAL position
+    # chunk image: latest state at the select's WAL position, a delete
+    # kept as the key's absence marker
     image = (
-        feed.filter(F.col("seq") <= F.col("s_k"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+        cdc_ops.snapshot_latest(
+            feed.filter(F.col("seq") <= F.col("s_k")), keep_tombstones=True
+        )
         .select(
             "pk", "chunk", "s_k", "ts", "seq", "op", "value", "event_type",
             F.lit("chunk").alias("src"),
@@ -4008,12 +3990,7 @@ def cdc_snapshot_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("wal").alias("src"),
     )
     tail_counts = tail.groupBy("pk").agg(F.count("*").alias("n_tail_events"))
-    merged = (
-        image.unionByName(tail)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .filter(F.col("op") != "delete")
-    )
+    merged = cdc_ops.snapshot_latest(image.unionByName(tail))
     return (
         merged.join(tail_counts, "pk", "left")
         .select(
@@ -4117,8 +4094,6 @@ def cdc_masking_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: masking is map-side expressions; ONE pseudonym-partitioned
     merge shuffle (the A3 shape); output |keys| rows.
     """.format(b=_MASK_BANDS)
-    from pyspark.sql import Window
-
     feed = _feed(spark, sf_dir).select(
         "pk",
         "ts",
@@ -4146,14 +4121,11 @@ def cdc_masking_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lo",
         "hi",
     )
-    w = Window.partitionBy("pseudonym").orderBy(F.desc("ts"), F.desc("seq"))
-    snap = (
-        masked.withColumn("_rn", F.row_number().over(w))
-        .withColumn(
-            "n_events",
-            F.count("*").over(Window.partitionBy("pseudonym")),
-        )
-        .filter((F.col("_rn") == 1) & (F.col("op") != "delete"))
+    snap = cdc_ops.snapshot_latest(
+        masked.withColumn(
+            "n_events", F.count("*").over(Window.partitionBy("pseudonym"))
+        ),
+        key_cols=("pseudonym",),
     )
     return snap.select(
         "pseudonym",

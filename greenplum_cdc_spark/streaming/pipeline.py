@@ -1792,7 +1792,7 @@ def _scd2_read_wm(store: "ReplicaStore", prev: DataFrame | None) -> DataFrame | 
     (valid_from, version_seq) is the live key's newest event."""
     p = _scd2_wm_path(store, store.current_version())
     if os.path.isdir(p):
-        return store.spark.read.parquet(p)
+        return store.spark.read.schema(_footer_schema([p])).parquet(p)
     if prev is None:
         return None
     return prev.groupBy("pk").agg(

@@ -90,8 +90,8 @@ def cached_feed(source: str, key: str, write_fn) -> str:
     """The directory ``write_fn(dir)`` fills with entry ``key``'s feed
     from ``source`` (the entry's ``sf_dir``), written once per identity
     of ``source`` (``memo.get_or_build("feed", ...)``): a rewritten
-    input writes the feed again. The directory is removed at process
-    exit.
+    input writes the feed again and removes the directory it replaces.
+    The current directory is removed at process exit.
 
     The feed is a pure function of the source tables, and bench's
     best-of-N reps and multi-entry gate runs re-invoke each streaming
@@ -105,7 +105,13 @@ def cached_feed(source: str, key: str, write_fn) -> str:
         write_fn(d)
         return d
 
-    return memo.get_or_build("feed", [source], build, extra=(key,))
+    return memo.get_or_build(
+        "feed",
+        [source],
+        build,
+        extra=(key,),
+        release=lambda old: shutil.rmtree(old, ignore_errors=True),
+    )
 
 
 def drain_memory(

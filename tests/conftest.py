@@ -6,7 +6,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from greenplum_cdc_spark.io import TABLES
 from greenplum_cdc_spark.session import get_spark

@@ -28,8 +28,6 @@ import threading
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
 from greenplum_cdc_spark.sources import amqp  # noqa: E402
 from greenplum_cdc_spark.sources.amqp import (  # noqa: E402
     BASIC_ACK,

@@ -248,6 +248,40 @@ def test_materialize_reads_back_without_a_job(spark):
     assert sorted(r.id for r in out.collect()) == list(range(5))
 
 
+def test_synthesized_parquet_feed_reads_back_without_a_job(spark, sf_dir):
+    from greenplum_cdc_spark.plans.cdc_queries import wal2json_v2_parse_events
+
+    first = wal2json_v2_parse_events(spark, sf_dir)  # writes the feed once
+    j0 = _next_job(spark)
+    again = wal2json_v2_parse_events(spark, sf_dir)
+    assert _next_job(spark) == j0, "a second construction ran a Spark job"
+    assert again.schema == first.schema
+
+
+def test_scd2_watermark_sidecar_reads_without_a_job(spark, tmp_path):
+    from greenplum_cdc_spark.streaming.pipeline import (
+        ReplicaStore,
+        _scd2_read_wm,
+        _scd2_wm_path,
+        scd2_merge_fn,
+    )
+
+    store = ReplicaStore(spark, str(tmp_path / "scd2"))
+    batch = spark.createDataFrame(
+        [(1, 100_000_000, 1, "insert", 1.0, "view"),
+         (2, 200_000_000, 2, "insert", 2.0, "view")],
+        "pk long, us long, seq long, op string, value double, event_type string",
+    ).select("pk", F.timestamp_micros("us").alias("ts"), "seq", "op", "value",
+             "event_type")
+    scd2_merge_fn(store)(batch, 0)
+    j0 = _next_job(spark)
+    wm = _scd2_read_wm(store, None)
+    assert _next_job(spark) == j0, "reading the watermark sidecar ran a Spark job"
+    sidecar = _scd2_wm_path(store, store.current_version())
+    assert wm.schema == spark.read.parquet(sidecar).schema
+    assert sorted((r.pk, r._wm_seq) for r in wm.collect()) == [(1, 1), (2, 2)]
+
+
 # ---- every memoized value follows a rewrite of its inputs ----
 
 # entry -> the memo its second call must rebuild after the rewrite

@@ -11,13 +11,9 @@ sweep makes the whole `queries()` surface fail fast instead.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entrymod  # noqa: E402
+import __spark_entry__ as entrymod
 
 # streaming/stateful wrappers run real streams (slow; separate tests
 # cover them) — the sweep audits the batch surface

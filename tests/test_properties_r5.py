@@ -7,12 +7,9 @@ from __future__ import annotations
 
 import json
 import struct
-import sys
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from greenplum_cdc_spark.sources.amqp import (  # noqa: E402
     FRAME_END,

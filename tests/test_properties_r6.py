@@ -6,12 +6,9 @@ the streaming scaffold's adopt-rename helpers.
 from __future__ import annotations
 
 import os
-import sys
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from greenplum_cdc_spark.sources.kafka_wire import (  # noqa: E402
     KafkaWireError,

@@ -14,13 +14,10 @@
 from __future__ import annotations
 
 import random
-import sys
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from greenplum_cdc_spark.sources.kafka_wire import (  # noqa: E402
     crc32c,

@@ -5,12 +5,8 @@ and the C48 handler-logic protocol tests.
 
 from __future__ import annotations
 
-import sys
-
 import pyspark.sql.functions as F
 from pyspark.sql import Window
-
-sys.path.insert(0, "/root/repo")
 
 from greenplum_cdc_spark.io import load_table  # noqa: E402
 from greenplum_cdc_spark.operators import stats  # noqa: E402

@@ -3,11 +3,7 @@ theta sketch set ops, sampled NDV estimation."""
 
 from __future__ import annotations
 
-import sys
-
 import pyspark.sql.functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from greenplum_cdc_spark.io import load_table  # noqa: E402
 from greenplum_cdc_spark.operators import sketches, stats, timeseries  # noqa: E402

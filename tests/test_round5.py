@@ -7,14 +7,11 @@ parity fix (r4 advice).
 from __future__ import annotations
 
 import datetime
-import sys
 
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from greenplum_cdc_spark.operators import sketches, stats, timeseries  # noqa: E402
 from greenplum_cdc_spark.plans import tpch  # noqa: E402

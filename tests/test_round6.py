@@ -16,6 +16,7 @@
 from __future__ import annotations
 
 import json
+import os
 import socket
 import struct
 import sys
@@ -23,8 +24,6 @@ import threading
 import time
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from greenplum_cdc_spark.sources.kafka_wire import (
     KafkaWireError,
@@ -604,6 +603,8 @@ class TestStreamingScaffold:
         src.write_bytes(b"v2, rewritten")  # a rewritten input writes again
         d3 = cached_feed(str(src), key, lambda d: calls.append(d))
         assert calls == [d1, d3] and d3 != d1
+        # the rebuild removed the directory it replaced
+        assert not os.path.exists(d1) and os.path.isdir(d3)
 
 
 # --- item 4: the protobuf bridge that un-gated C48 -----------------------

@@ -12,11 +12,8 @@
 from __future__ import annotations
 
 import random
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 
 class TestCrc32cMany:

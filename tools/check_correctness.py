@@ -27,7 +27,7 @@ import threading
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from greenplum_cdc_spark.io import TABLES  # noqa: E402
