@@ -10,14 +10,16 @@ added to a directory or a path re-pointed by a symlink all miss and
 rebuild, and no caller ever invalidates anything by hand. A rebuilt
 value replaces the one its inputs had before, so a stale value is never
 kept; a value that holds a resource (a scratch directory) passes
-`release`, which is called on the stale value a rebuild replaces. A
+`release`, which is kept with the value and called on it when a
+rebuild replaces it or `clear()` drops it. A
 value bound to one Spark session (catalog tables, cached relations)
 also passes `session`: its `applicationId` joins the key, so a
 restarted session rebuilds. `extra` carries any other input the value
 depends on, such as the session conf values that change parquet schema
 inference.
 
-`clear()` drops every entry (cold-vs-cold timing); `stats()` reports
+`clear()` drops every entry (cold-vs-cold timing) and releases each
+value that holds a resource; `stats()` reports
 hits, misses and entries for each name.
 """
 
@@ -28,8 +30,8 @@ import threading
 from typing import Any, Callable, Sequence
 
 _lock = threading.Lock()
-# (name, realpaths, applicationId, extra) -> (identities, value)
-_entries: dict[tuple, tuple[tuple, Any]] = {}
+# (name, realpaths, applicationId, extra) -> (identities, value, release)
+_entries: dict[tuple, tuple[tuple, Any, Callable[[Any], None] | None]] = {}
 _counts: dict[str, dict[str, int]] = {}
 
 
@@ -57,8 +59,8 @@ def get_or_build(
 ) -> Any:
     """`build()`'s value for the current identity of `paths` (and of
     `session`, when given), built at most once per identity. When a
-    rebuild replaces the value of an older identity, `release` is
-    called on that value."""
+    rebuild replaces the value of an older identity, or `clear()` drops
+    it, `release` is called on that value."""
     reals = tuple(os.path.realpath(p) for p in paths)
     slot = (
         name,
@@ -77,17 +79,27 @@ def get_or_build(
     value = build()
     with _lock:
         replaced = _entries.get(slot)
-        _entries[slot] = (ident, value)
-    if release is not None and replaced is not None and replaced[0] != ident:
-        release(replaced[1])
+        _entries[slot] = (ident, value, release)
+    if replaced is not None and replaced[0] != ident:
+        _release(replaced)
     return value
 
 
+def _release(entry: tuple) -> None:
+    _, value, release = entry
+    if release is not None:
+        release(value)
+
+
 def clear() -> None:
-    """Drop every memoized value and reset the counters."""
+    """Drop every memoized value, releasing each one built with a
+    `release`, and reset the counters."""
     with _lock:
+        dropped = list(_entries.values())
         _entries.clear()
         _counts.clear()
+    for entry in dropped:
+        _release(entry)
 
 
 def stats() -> dict[str, dict[str, int]]:

@@ -225,17 +225,28 @@ def normalize_pk_changes(
     it just before the upsert (`subseq=1`), keeping the replay total
     order deterministic — pass order_cols=(ts, seq, subseq) to the
     snapshot/apply window.
+
+    One pass over `feed`: each row becomes an array of one upsert, or
+    of the delete and the upsert for a PK-changing update, and `inline`
+    emits its elements, so the feed is scanned (and its JSON parsed)
+    once. The rows are those of `feed ∪ deletes`; only their order
+    differs, and every consumer windows over them.
     """
     has_change = (
         (F.col(op_col) == "update")
         & F.col(old_pk_col).isNotNull()
         & (F.col(old_pk_col) != F.col(pk_col))
     )
-    base = feed.withColumn("subseq", F.lit(1))
-    deletes = (
-        feed.filter(has_change)
-        .withColumn(pk_col, F.col(old_pk_col))
-        .withColumn(op_col, F.lit("delete"))
-        .withColumn("subseq", F.lit(0))
+    cols = feed.columns
+    upsert = F.struct(*[F.col(c) for c in cols], F.lit(1).alias("subseq"))
+    delete = F.struct(
+        *[
+            F.col(old_pk_col).alias(c) if c == pk_col
+            else F.lit("delete").alias(c) if c == op_col
+            else F.col(c)
+            for c in cols
+        ],
+        F.lit(0).alias("subseq"),
     )
-    return base.unionByName(deletes)
+    rows = F.when(has_change, F.array(delete, upsert)).otherwise(F.array(upsert))
+    return feed.select(F.inline(rows))

@@ -1,6 +1,10 @@
 from __future__ import annotations
 
+from collections import Counter
+
 import pyspark.sql.functions as F
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from greenplum_cdc_spark.catalog import SchemaRegistry, TableSpec
 from greenplum_cdc_spark.functions.ddl import add_schema_name, ddl_for_event, translate_sql
@@ -243,6 +247,70 @@ def test_normalize_pk_changes_same_pk_update_untouched(spark):
     )
     rows = snap.collect()
     assert len(rows) == 1 and rows[0]["value"] == 30.0
+
+
+def _normalize_by_union(feed, pk_col="pk", old_pk_col="old_pk", op_col="op"):
+    """The two-scan form `normalize_pk_changes` replaced, kept as its
+    reference: the feed with subseq=1, unioned with a filter of it that
+    re-keys each PK-changing update to a delete of its old key."""
+    has_change = (
+        (F.col(op_col) == "update")
+        & F.col(old_pk_col).isNotNull()
+        & (F.col(old_pk_col) != F.col(pk_col))
+    )
+    base = feed.withColumn("subseq", F.lit(1))
+    deletes = (
+        feed.filter(has_change)
+        .withColumn(pk_col, F.col(old_pk_col))
+        .withColumn(op_col, F.lit("delete"))
+        .withColumn("subseq", F.lit(0))
+    )
+    return base.unionByName(deletes)
+
+
+@st.composite
+def _pk_change_feed(draw):
+    """Inserts, deletes, same-PK updates, PK-changing updates and
+    updates with a NULL old_pk, over a few keys so they collide."""
+    rows = []
+    for seq in range(draw(st.integers(min_value=0, max_value=20))):
+        pk = draw(st.integers(min_value=0, max_value=3))
+        op = draw(st.sampled_from(["insert", "update", "update", "delete"]))
+        old_pk = draw(st.one_of(st.none(), st.integers(min_value=0, max_value=3)))
+        rows.append((pk, old_pk, draw(st.integers(0, 5)), seq, op, float(seq)))
+    return rows
+
+
+@given(rows=_pk_change_feed())
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_normalize_pk_changes_matches_union_form(spark, rows):
+    """One pass emits the same columns and the same multiset of rows,
+    `subseq` included, as the union of the feed and its re-keyed
+    PK-changing updates."""
+    feed = spark.createDataFrame(
+        rows, "pk long, old_pk long, ts int, seq long, op string, value double"
+    )
+    got = cdc_ops.normalize_pk_changes(feed)
+    want = _normalize_by_union(feed)
+    assert got.columns == want.columns
+    assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
+
+
+def test_typed_feed_scans_the_batch_once(spark, tmp_path):
+    """The Maxwell micro-batch body reads (and JSON-parses) its input
+    once: one scan leaf in the optimized plan of the typed feed."""
+    from greenplum_cdc_spark.streaming.pipeline import CDCPipeline
+
+    src = tmp_path / "batch.json"
+    src.write_text("\n".join(MAXWELL_LINES) + "\n")
+    raw = spark.read.text(str(src)).withColumnRenamed("value", "line")
+    pipe = CDCPipeline(spark, str(tmp_path / "replica"))
+    feed = pipe._typed_feed(maxwell.parse_maxwell(raw))
+    assert feed._jdf.queryExecution().optimizedPlan().collectLeaves().size() == 1
 
 
 def test_schema_evolution_null_backfill(spark):

@@ -104,6 +104,27 @@ def test_clear_drops_values_and_counters(tmp_path):
     assert len(calls) == 2
 
 
+def test_clear_releases_what_it_drops(tmp_path):
+    f = tmp_path / "t"
+    f.write_bytes(b"x")
+    released: list = []
+    memo.get_or_build("t_release", [str(f)], lambda: "held", release=released.append)
+    memo.get_or_build("t_plain", [str(f)], lambda: "plain")
+    memo.clear()
+    assert released == ["held"]
+
+
+def test_clear_removes_feed_directories(tmp_path):
+    from greenplum_cdc_spark.streaming.scaffold import cached_feed
+
+    src = tmp_path / "events.parquet"
+    src.write_bytes(b"v1")
+    feed = cached_feed(str(src), "test_clear_removes_feed_directories", lambda d: None)
+    assert os.path.isdir(feed)
+    memo.clear()
+    assert not os.path.exists(feed)
+
+
 def test_concurrent_callers_count_every_call(tmp_path):
     """More threads than cores hammer one slot with a short switch
     interval: no lost counter update, one entry."""

@@ -321,6 +321,35 @@ def test_pipeline_pk_change_and_watermark(spark, tmp_path):
     assert len(wm) == 1 and wm[0]["n_applied"] == 1
 
 
+def test_poll_reads_each_input_line_once(spark, tmp_path):
+    """The query progress of a poll over a 1,000-line file counts 1,000
+    input rows: the micro-batch body scans its batch once, including
+    when PK-changing updates expand into two rows."""
+    import json
+
+    from tools.fork_census import LastProgress
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    # every seventh update moves its row to the next key
+    lines = [
+        {"database": "d", "table": "t", "type": "update", "ts": 1700000000 + i,
+         "xid": i, "data": {"id": str(i % 50 + (i % 7 == 0))}, "old": {"id": str(i % 50)}}
+        for i in range(1000)
+    ]
+    (in_dir / "feed.json").write_text("\n".join(json.dumps(x) for x in lines) + "\n")
+    listener = LastProgress()
+    spark.streams.addListener(listener)
+    try:
+        CDCPipeline(spark, str(tmp_path / "rep")).run_available(
+            str(in_dir), str(tmp_path / "ckpt")
+        )
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.progress.numInputRows == 1000
+
+
 def test_stateful_stream_dedup_across_batches(spark, tmp_path):
     """applyInPandasWithState: a hash emits once EVER, across batches."""
     import pyarrow as pa
